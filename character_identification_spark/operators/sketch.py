@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from character_identification_spark.functions.hashing import h_long
 from character_identification_spark.operators.textstats import tokens
+from character_identification_spark.session import local_frame
 
 # HLL geometry: 2^8 = 256 registers from the first two hex chars of the
 # md5; rho read from the next 60 bits. alpha_m for m >= 128.
@@ -163,9 +164,8 @@ def cms_frequencies(
     sketch = bucketed.groupBy("s", "b").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    spark = docs.sparkSession
-    probe_df = spark.createDataFrame(
-        [(str(p),) for p in probes], "token string"
+    probe_df = local_frame(
+        docs.sparkSession, [(str(p),) for p in probes], "token string"
     ).select(
         "token",
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("s"),

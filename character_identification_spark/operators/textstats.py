@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from character_identification_spark.session import local_frame
+
 # Tiny per-language stopword inventories for the n-gram/stopword-ratio
 # language heuristic. Deliberately small and inline: broadcast-free (they
 # compile into the plan as literals) and easy to mirror in oracle SQL.
@@ -485,9 +487,9 @@ def bpe_learn_merges(
     round's pair table (bpe_pair_counts). See _bpe_train for the scale
     shape; every tie is broken (count desc, pair asc), so the learned
     merge table is a pure function of the corpus."""
-    spark = docs.sparkSession
     _, out = _bpe_train(docs, n_merges, text_col)
-    return spark.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         out,
         "step int, left_sym string, right_sym string, merged string, n_occurrences long",
     )

@@ -1,6 +1,8 @@
 """The end-to-end corpus-curation pipeline: checkpointed, resumable,
 metered — the training-data companion to the linkage pipeline
-(plans/pipeline.py, same StageStore / lineage / metrics contract).
+(plans/pipeline.py, same StageStore / lineage / metrics contract: meta
+rows are committed once per run, also when a stage fails; a hard-killed
+run loses that run's meta rows but still resumes from its stage tables).
 
 Stage graph (each stage = one checkpoint table + metrics + lineage):
 
@@ -67,7 +69,13 @@ def run_curation(
     with its quality score)."""
     cfg = cfg or CurationConfig()
     store = StageStore(spark, workdir, cfg.catalog)
+    try:
+        return _curation_stages(store, docs, cfg)
+    finally:
+        store.commit_buffered()
 
+
+def _curation_stages(store: StageStore, docs: DataFrame, cfg: CurationConfig) -> dict[str, DataFrame]:
     keep_cols = ("text",) + ((cfg.url_col,) if cfg.url_col else ())
     stat_cols = (
         "n_chars", "n_tokens", "avg_token_len", "punct_ratio",

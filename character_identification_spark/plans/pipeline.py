@@ -28,9 +28,14 @@ latest/run-linking.py:36-38) promoted to real tables. ``force`` recomputes
 everything.
 
 Metrics (stage, rows, wall_s, inputs) and lineage (stage, partition_id,
-rows) append to ``_meta_metrics`` / ``_meta_lineage`` — the north rule's
+rows) go to ``_meta_metrics`` / ``_meta_lineage`` — the north rule's
 per-partition lineage + metrics tables, and the distributed analog of the
-reference's Timer logging (reference: python/util/__init__.py:5-28).
+reference's Timer logging (reference: python/util/__init__.py:5-28). Each
+built stage buffers its rows in the StageStore; the run commits them once,
+one append per table, when it ends — also when a stage fails, so the rows
+of the stages that finished are kept. A hard-killed process (no
+``finally``) loses that run's meta rows, but its committed stage tables
+still let the next run resume.
 """
 
 from __future__ import annotations
@@ -83,7 +88,6 @@ class PipelineConfig:
 
 
 def _run_stage(store: StageStore, name: str, inputs: list[str], build, cfg: PipelineConfig) -> DataFrame:
-    spark = store.spark
     if store.exists(name) and not cfg.force:
         return store.read(name)
     t0 = time.monotonic()
@@ -92,23 +96,23 @@ def _run_stage(store: StageStore, name: str, inputs: list[str], build, cfg: Pipe
     out = store.read(name)
     # ONE scan of the committed table: the per-partition lineage aggregate
     # is collected (tiny — one row per partition) and both the lineage
-    # table and the stage row count derive from it, instead of three
+    # rows and the stage row count derive from it, instead of three
     # separate scans (lineage write, count, downstream read all re-reading)
     lin = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
         F.count("*").alias("rows")
     ).collect()
     wall = time.monotonic() - t0
-    lineage = spark.createDataFrame(
-        [(name, int(r["partition_id"]), int(r["rows"])) for r in lin],
+    store.buffer(
+        "_meta_lineage",
         "stage string, partition_id int, rows long",
+        [(name, int(r["partition_id"]), int(r["rows"])) for r in lin],
     )
-    store.append(lineage, "_meta_lineage")
     n = sum(r["rows"] for r in lin)
-    metrics = spark.createDataFrame(
-        [(name, n, float(wall), ",".join(inputs))],
+    store.buffer(
+        "_meta_metrics",
         "stage string, rows long, wall_s double, inputs string",
+        [(name, n, float(wall), ",".join(inputs))],
     )
-    store.append(metrics, "_meta_metrics")
     return out
 
 
@@ -118,10 +122,17 @@ def run_pipeline(
     workdir: str,
     cfg: PipelineConfig | None = None,
 ) -> dict[str, DataFrame]:
-    """Run all stages over a pages DF; returns every stage's DataFrame."""
+    """Run all stages over a pages DF; returns every stage's DataFrame.
+    The stages' meta rows are committed once, when the run ends or fails."""
     cfg = cfg or PipelineConfig()
     store = StageStore(spark, workdir, cfg.catalog)
+    try:
+        return _pipeline_stages(store, pages, cfg)
+    finally:
+        store.commit_buffered()
 
+
+def _pipeline_stages(store: StageStore, pages: DataFrame, cfg: PipelineConfig) -> dict[str, DataFrame]:
     extracted = _run_stage(
         store, "extracted", ["pages"], lambda: extracted_pages(pages, cfg.keep_lang), cfg
     )

@@ -13,6 +13,11 @@ This mirrors the reference's stage-checkpoint pattern — it pickles fully
 featurized states between the coref and linking stages (reference:
 latest/export_noc_clusters.py:167-173 write, latest/run-linking.py:36-38
 read) — promoted from pickle files to real tables.
+
+Run metadata (the pipelines' ``_meta_*`` rows) is not appended as it is
+produced: ``buffer`` holds it for the run and ``commit_buffered`` appends
+each table's rows in one write, so a run costs one append (one Iceberg
+snapshot) per meta table however many stages it builds.
 """
 
 from __future__ import annotations
@@ -20,6 +25,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from character_identification_spark.session import local_frame
 
 
 class StageStore:
@@ -29,6 +36,8 @@ class StageStore:
         self.catalog = catalog
         if catalog is None:
             os.makedirs(root, exist_ok=True)
+        # run-scoped rows awaiting commit_buffered: table -> (DDL, rows)
+        self._buffered: dict[str, tuple[str, list[tuple]]] = {}
 
     # -- parquet fallback paths ------------------------------------------
     def _path(self, name: str) -> str:
@@ -62,6 +71,18 @@ class StageStore:
                 df.writeTo(tbl).create()
         else:
             df.write.mode("append").parquet(self._path(name))
+
+    def buffer(self, name: str, schema: str, rows: list[tuple]) -> None:
+        """Queue ``rows`` (DDL ``schema``) for one later append to ``name``."""
+        self._buffered.setdefault(name, (schema, []))[1].extend(rows)
+
+    def commit_buffered(self) -> None:
+        """Append each buffered table's rows through ``append`` in one write,
+        then empty the buffer. Tables with no rows are not touched."""
+        buffered, self._buffered = self._buffered, {}
+        for name, (schema, rows) in buffered.items():
+            if rows:
+                self.append(local_frame(self.spark, rows, schema), name)
 
     def read(self, name: str) -> DataFrame:
         if self.catalog:

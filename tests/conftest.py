@@ -1,5 +1,6 @@
-"""Shared Spark fixtures. One session for the whole run (local[8],
-8 shuffle partitions) — Spark startup is ~10 s, tests share it."""
+"""Shared Spark fixtures. One session for the whole run (local[cores] with
+cores from session.DEFAULT_CPUS — SPARK_GRAFT_CPUS, else the host's CPUs —
+and 8 shuffle partitions) — Spark startup is ~10 s, tests share it."""
 
 from __future__ import annotations
 
@@ -7,14 +8,14 @@ import shutil
 
 import pytest
 
-from character_identification_spark.session import get_spark
+from character_identification_spark.session import DEFAULT_CPUS, get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(
         app_name="ci_spark_tests",
-        cores=8,
+        cores=DEFAULT_CPUS,
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )

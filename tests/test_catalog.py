@@ -1,4 +1,4 @@
-"""StageStore catalog-branch coverage.
+"""StageStore catalog-branch coverage, and the buffered meta-row commit.
 
 The sandbox ships no Iceberg runtime jar and Spark's built-in session
 catalog rejects the V2 REPLACE TABLE path (verified:
@@ -14,6 +14,7 @@ On a real cluster the same calls hit Iceberg via
 
 from __future__ import annotations
 
+from character_identification_spark.session import local_frame
 from character_identification_spark.sources.catalog import StageStore
 
 
@@ -109,3 +110,39 @@ def test_stage_store_catalog_branch_flow(spark):
     import os
 
     assert not os.path.exists("/nonexistent")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_frame_is_a_python_free_local_scan(spark):
+    ddl = "stage string, partition_id int, rows long"
+    df = local_frame(spark, [("names", 0, 3), ("names", 1, 4)], ddl)
+    # createDataFrame(list) plans "Scan ExistingRDD" over a Python map
+    assert "LocalTableScan" in _plan(df)
+    assert df.dtypes == [("stage", "string"), ("partition_id", "int"), ("rows", "bigint")]
+    assert sorted(map(tuple, df.collect())) == [("names", 0, 3), ("names", 1, 4)]
+    empty = local_frame(spark, [], ddl)
+    assert "LocalTableScan" in _plan(empty)
+    assert empty.dtypes == df.dtypes and empty.count() == 0
+
+
+def test_buffered_rows_commit_once_per_table(spark, tmp_path, monkeypatch):
+    appended = []
+    orig = StageStore.append
+    monkeypatch.setattr(
+        StageStore,
+        "append",
+        lambda self, df, name: (appended.append(name), orig(self, df, name)),
+    )
+    store = StageStore(spark, str(tmp_path))
+    store.buffer("_meta_a", "k string, v long", [("x", 1)])
+    store.buffer("_meta_b", "k string", [])
+    store.buffer("_meta_a", "k string, v long", [("y", 2), ("z", 3)])
+    store.commit_buffered()
+    assert appended == ["_meta_a"]  # one write per table; empty tables skipped
+    assert sorted(map(tuple, store.read("_meta_a").collect())) == [("x", 1), ("y", 2), ("z", 3)]
+    assert not (tmp_path / "_meta_b").exists()
+    store.commit_buffered()  # the buffer was emptied by the commit
+    assert appended == ["_meta_a"]

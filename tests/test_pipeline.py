@@ -3,18 +3,46 @@
 from __future__ import annotations
 
 import os
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
+from character_identification_spark.plans import pipeline
 from character_identification_spark.plans.pipeline import (
     PipelineConfig,
     evaluate_pipeline,
     run_pipeline,
 )
+from character_identification_spark.sources.catalog import StageStore
+
+STAGES = (
+    "extracted", "mentions", "names", "block_assign", "candidate_pairs",
+    "scored_pairs", "edge_split", "name_clusters", "assignments", "entities",
+)
 
 
 def _cfg():
     return PipelineConfig()
+
+
+@pytest.fixture()
+def appends(monkeypatch):
+    """Spy on StageStore.append: a Counter of the table names it is called
+    with (the call still goes through)."""
+    calls: Counter = Counter()
+    orig = StageStore.append
+
+    def spy(self, df, name):
+        calls[name] += 1
+        return orig(self, df, name)
+
+    monkeypatch.setattr(StageStore, "append", spy)
+    return calls
+
+
+def _table(spark, workdir, name):
+    return spark.read.parquet(os.path.join(workdir, name))
 
 
 def test_end_to_end_f1_gate(spark, small_corpus, tmp_workdir):
@@ -46,13 +74,15 @@ def test_end_to_end_f1_gate(spark, small_corpus, tmp_workdir):
     assert recon.count() == 0
 
 
-def test_resume_skips_and_is_identical(spark, small_corpus, tmp_workdir):
+def test_resume_skips_and_is_identical(spark, small_corpus, tmp_workdir, appends):
     pages, gold = small_corpus
     r1 = run_pipeline(spark, pages, tmp_workdir, _cfg())
     a1 = sorted(map(tuple, r1["assignments"].select("mention_uid", "cluster_id").collect()))
     metrics_rows = spark.read.parquet(os.path.join(tmp_workdir, "_meta_metrics")).count()
 
+    appends.clear()
     r2 = run_pipeline(spark, pages, tmp_workdir, _cfg())
+    assert not appends  # every stage skipped: the empty buffer commits nothing
     a2 = sorted(map(tuple, r2["assignments"].select("mention_uid", "cluster_id").collect()))
     assert a1 == a2
     # resumed run appends no new stage metrics (all stages skipped)
@@ -60,6 +90,65 @@ def test_resume_skips_and_is_identical(spark, small_corpus, tmp_workdir):
         spark.read.parquet(os.path.join(tmp_workdir, "_meta_metrics")).count()
         == metrics_rows
     )
+
+
+def test_meta_tables_one_append_per_run(spark, small_corpus, tmp_workdir, appends):
+    """A forced run commits each meta table with ONE append, in the DDL
+    the tables have always had, and its lineage reconciles with metrics."""
+    pages, _ = small_corpus
+    run_pipeline(spark, pages, tmp_workdir, PipelineConfig(force=True))
+    assert appends == {"_meta_lineage": 1, "_meta_metrics": 1}
+
+    lineage = _table(spark, tmp_workdir, "_meta_lineage")
+    metrics = _table(spark, tmp_workdir, "_meta_metrics")
+    assert lineage.dtypes == [("stage", "string"), ("partition_id", "int"), ("rows", "bigint")]
+    assert metrics.dtypes == [
+        ("stage", "string"), ("rows", "bigint"), ("wall_s", "double"), ("inputs", "string"),
+    ]
+    assert sorted(r["stage"] for r in metrics.collect()) == sorted(STAGES)
+    recon = (
+        lineage.groupBy("stage").agg(F.sum("rows").alias("lrows"))
+        .join(metrics.select("stage", "rows"), "stage", "full_outer")
+        .filter(~F.col("lrows").eqNullSafe(F.col("rows")))
+    )
+    assert recon.count() == 0
+    # a stage's rows count its committed table
+    entities = metrics.filter(F.col("stage") == "entities").collect()[0]
+    assert entities["rows"] == _table(spark, tmp_workdir, "entities").count()
+    assert entities["inputs"] == "assignments"
+
+
+def test_failed_stage_commits_finished_meta_and_resumes(
+    spark, small_corpus, tmp_workdir, appends, monkeypatch
+):
+    """A late stage that raises: the error propagates, the stages before it
+    keep their meta rows, and the rerun appends rows only for what it
+    rebuilds."""
+    pages, gold = small_corpus
+
+    def boom(assignments):
+        raise RuntimeError("canonicalize failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "canonical_entities", boom)
+        with pytest.raises(RuntimeError, match="canonicalize failed"):
+            run_pipeline(spark, pages, tmp_workdir, _cfg())
+    assert appends == {"_meta_lineage": 1, "_meta_metrics": 1}
+    finished = sorted(STAGES[:-1])
+    metrics = _table(spark, tmp_workdir, "_meta_metrics")
+    assert sorted(r["stage"] for r in metrics.collect()) == finished
+    lineage = _table(spark, tmp_workdir, "_meta_lineage")
+    assert sorted(r["stage"] for r in lineage.select("stage").distinct().collect()) == finished
+    assert not os.path.exists(os.path.join(tmp_workdir, "entities"))
+
+    appends.clear()
+    res = run_pipeline(spark, pages, tmp_workdir, _cfg())
+    assert appends == {"_meta_lineage": 1, "_meta_metrics": 1}
+    metrics = _table(spark, tmp_workdir, "_meta_metrics")
+    assert sorted(r["stage"] for r in metrics.collect()) == sorted(STAGES)
+    lineage = _table(spark, tmp_workdir, "_meta_lineage")
+    assert lineage.groupBy("stage", "partition_id").count().filter("count > 1").count() == 0
+    assert evaluate_pipeline(res, gold)["f1"] >= 0.99
 
 
 def test_resume_mid_stage(spark, small_corpus, tmp_workdir):
