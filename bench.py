@@ -1,37 +1,46 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR plus the
-north-rule scaling evidence (same ER job at local[8] vs local[32]).
+north-rule scaling evidence (the shipped ER pipeline at local[lo] vs
+local[hi]).
 
 Prints ONE JSON line:
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>,
-   "er_docs_per_sec": <pipeline throughput at full parallelism>,
-   "scaling": {"pages": N, "cores_lo": 8, "cores_hi": 32,
+   "er_docs_per_sec": <pipeline throughput at the hi leg>,
+   "scaling": {"pages": N, "cores_lo": lo, "cores_hi": hi,
                "docs_per_sec_lo": ..., "docs_per_sec_hi": ...,
                "speedup": ..., "efficiency": ...}}
 
 Every query is forced through the noop sink so column pruning can't skip
-the measured work. Scaling runs the identical pipeline on the identical
+the measured work. Scaling times one forced ``plans.pipeline.run_pipeline``
+pass, every stage written to a fresh scratch workdir, on the identical
 parquet input at two parallelism levels (the sandbox evidence for the
 north rule's N vs 4N executor criterion — see BASELINE.md) and reports
 efficiency = (docs_per_sec_hi / docs_per_sec_lo) / (cores_hi / cores_lo).
 
 The headline suite runs taskset-pinned in a fresh subprocess JVM,
-best-of-N (per-query min, default N=2) — same shared-host discipline as
-the scaling section, so round-over-round deltas measure code, not
-tenants.
+best-of-N (per-query min) — same shared-host discipline as the scaling
+section, so round-over-round deltas measure code, not tenants. Every
+session comes from ``session.get_spark`` with 4 × cores shuffle partitions
+plus BENCH_CONF.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALING=0 to skip the scaling
-section, SPARK_GRAFT_SCALE_PAGES (default 12000),
-SPARK_GRAFT_HEADLINE_REPEATS (default 2).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+SPARK_GRAFT_SCALING=0 to skip the scaling section,
+SPARK_GRAFT_SCALE_PAGES (default 1600000), SPARK_GRAFT_SCALE_CORES
+("lo,hi"; default hi = min(8, CPUS), lo = max(1, hi // 4)),
+SPARK_GRAFT_SCALE_REPEATS (default 2), SPARK_GRAFT_HEADLINE_REPEATS
+(default 3).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -39,8 +48,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from character_identification_spark.session import DEFAULT_CPUS, get_spark
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS
 SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
 SCALE_PAGES = int(os.environ.get("SPARK_GRAFT_SCALE_PAGES", "1600000"))
 
@@ -57,44 +68,41 @@ HEADLINE = [
     "tpch_q1",              # relational agg baseline
 ]
 
+BENCH_CONF = {
+    # the bench corpus is ~10²–10³ MB: without these, file packing and
+    # AQE coalescing squeeze scans/shuffles into a handful of partitions
+    # and parallelism never materializes
+    "spark.sql.files.maxPartitionBytes": "16m",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    # bigger Arrow batches amortize the per-batch numpy setup of the
+    # vectorized string-similarity UDFs over the 10^7-pair stage
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    "spark.ui.showConsoleProgress": "false",
+}
 
-def _session(cores: int, app: str) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(4 * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        # the bench corpus is ~10²–10³ MB: without these, file packing and
-        # AQE coalescing squeeze scans/shuffles into a handful of
-        # partitions and parallelism never materializes
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        # bigger Arrow batches amortize the per-batch numpy setup of the
-        # vectorized string-similarity UDFs over the 10^7-pair stage
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+
+def bench_session(app: str, cores: int = CPUS) -> SparkSession:
+    spark = get_spark(app, cores, 4 * cores, extra_conf=BENCH_CONF)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def warm(spark: SparkSession) -> None:
+    """Warm the Python-worker pool + Arrow channel outside the timed
+    window: the first pandas-UDF call in a session pays ~10-20 s of worker
+    spawn + JIT that would otherwise land on the first measured query."""
+    from character_identification_spark.functions.strings import jaro_winkler_udf
+
+    w = spark.createDataFrame([("alpha beta", "alpha bets")], ["norm_1", "norm_2"])
+    _force(w.select(jaro_winkler_udf("norm_1", "norm_2")))
+
+
 def run_headline(spark: SparkSession) -> dict[str, float]:
     from character_identification_spark.driver_contract import QUERIES
-    from character_identification_spark.operators.scoring import score_pairs
-
-    # warm the Python-worker pool + Arrow channel outside the timed
-    # window (same convention as the scaling worker): the first pandas-UDF
-    # call in a session pays ~10-20 s of worker spawn + JIT that would
-    # otherwise land entirely on the first measured query
-    warm = spark.createDataFrame(
-        [("alpha beta", "alpha bets")], ["norm_1", "norm_2"]
-    )
-    _force(score_pairs(warm, dedup_strings=False))
 
     times: dict[str, float] = {}
     for name in HEADLINE:
@@ -109,11 +117,29 @@ def _headline_worker() -> None:
     query seconds as one JSON line. One JVM per repeat, taskset-pinned by
     the parent — same isolation discipline as the scaling workers, so
     round-over-round headline comparisons measure code, not tenants."""
-    spark = _session(CPUS, "bench-headline")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("bench-headline")
+    warm(spark)
     times = run_headline(spark)
     print("HEADLINE_JSON " + json.dumps(times))
     spark.stop()
+
+
+def _run_pinned(args: list[str], cores: int, marker: str) -> str:
+    """Run this script with ``args`` pinned to CPUs 0..cores-1; return the
+    first capture of ``marker`` in its stdout. Pinning keeps an unpinned
+    JVM's GC/JIT/shuffle-IO threads off spare host cores, which would
+    inflate low-core throughput."""
+    cmd = [sys.executable, os.path.abspath(__file__), *args]
+    if shutil.which("taskset"):
+        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
+    m = re.search(marker, proc.stdout)
+    if not m:
+        raise RuntimeError(
+            f"{args[0]} ({cores} cores) failed:\n{proc.stdout[-2000:]}\n"
+            f"{proc.stderr[-2000:]}"
+        )
+    return m.group(1)
 
 
 def run_headline_pinned() -> tuple[dict[str, float], list[dict[str, float]]]:
@@ -124,122 +150,66 @@ def run_headline_pinned() -> tuple[dict[str, float], list[dict[str, float]]]:
     2 to 3 in round 4: the round-3 driver artifact showed a 30% spread
     between its two runs (VERDICT r3 #4) and one extra ~70 s run is cheap
     insurance against a tenant burst landing on both."""
-    import re
-    import subprocess
-
     repeats = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPEATS", "3"))
-    runs: list[dict[str, float]] = []
-    for _ in range(repeats):
-        cmd = [sys.executable, os.path.abspath(__file__), "--headline-worker"]
-        if shutil.which("taskset"):
-            cmd = ["taskset", "-c", f"0-{CPUS - 1}"] + cmd
-        proc = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
-        m = re.search(r"HEADLINE_JSON (\{.*\})", proc.stdout)
-        if not m:
-            raise RuntimeError(
-                f"headline worker failed:\n{proc.stdout[-2000:]}\n"
-                f"{proc.stderr[-2000:]}"
-            )
-        runs.append(json.loads(m.group(1)))
+    runs = [
+        json.loads(_run_pinned(["--headline-worker"], CPUS, r"HEADLINE_JSON (\{.*\})"))
+        for _ in range(repeats)
+    ]
     best = {
         name: round(min(r[name] for r in runs), 3) for name in HEADLINE
     }
     return best, runs
 
 
-def _pipeline_assignments(spark: SparkSession, pages_path: str, cores: int):
-    """The flagship ER dataflow, store-less (pure compute, no checkpoint
-    I/O) — the job whose docs/sec the scaling criterion measures. Same
-    name-level dedup-then-link dataflow as plans/pipeline.run_pipeline."""
-    from character_identification_spark.functions.hashing import h_long
-    from character_identification_spark.ingest.extract import extracted_pages
-    from character_identification_spark.ingest.mentions import extract_mentions
-    from character_identification_spark.operators.blocking import assign_blocks
-    from character_identification_spark.operators.cc import connected_components
-    from character_identification_spark.operators.context import (
-        name_cluster_table,
-        resolve_in_context,
-        split_name_edges,
-    )
-    from character_identification_spark.operators.pairs import generate_pairs
-    from character_identification_spark.operators.scoring import score_pairs
-
-    pages = spark.read.parquet(pages_path)
-    # mentions feed two consumers (name derivation and the final cluster
-    # join) — persist so the pandas-UDF extraction chain runs once, the
-    # way the checkpointed pipeline (plans/pipeline.py) already does
-    mentions = extract_mentions(extracted_pages(pages, "en")).persist()
-    names = (
-        mentions.select("norm").distinct()
-        .withColumn("mention_uid", h_long(F.col("norm")))  # as pipeline.py
-    ).persist()
-    blocks = assign_blocks(names, max_block_size=200)
-    pairs = generate_pairs(names, blocks, payload_cols=("norm",))
-    scored = score_pairs(pairs, 0.82, dedup_strings=False).persist()
-    safe_edges, amb_links = split_name_edges(scored)
-    name_clusters = name_cluster_table(
-        names, connected_components(safe_edges), amb_links
-    ).persist()
-    return resolve_in_context(mentions, name_clusters, amb_links)
-
-
 def _scale_worker(cores: int, pages_path: str) -> None:
-    """Child-process entry: run the pipeline once at local[cores], print
-    the wall seconds. One JVM per measurement — session reuse across
-    masters leaks broken accumulator channels that tax every task of the
-    second session."""
-    spark = _session(cores, f"bench-scaling-{cores}")
-    spark.sparkContext.setLogLevel("ERROR")
+    """Child-process entry: run the shipped pipeline once at local[cores]
+    into a fresh workdir, print the wall seconds, remove the workdir. One
+    JVM per measurement — session reuse across masters leaks broken
+    accumulator channels that tax every task of the second session."""
     from character_identification_spark.ingest.extract import extract_text
-
-    # warm the python-worker pool (pandas UDF) outside the timed window
-    _force(
-        spark.read.parquet(pages_path).select(extract_text(F.col("html")).alias("x"))
+    from character_identification_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
     )
-    t0 = time.monotonic()
-    _force(_pipeline_assignments(spark, pages_path, cores))
-    print(f"WALL_S {time.monotonic() - t0:.3f}")
+
+    spark = bench_session(f"bench-scaling-{cores}", cores)
+    pages = spark.read.parquet(pages_path)
+    # warm the python-worker pool (pandas UDF) outside the timed window
+    _force(pages.select(extract_text(F.col("html")).alias("x")))
+    workdir = tempfile.mkdtemp(prefix="bench_scale_")
+    try:
+        t0 = time.monotonic()
+        run_pipeline(spark, pages, workdir, PipelineConfig(force=True))
+        print(f"WALL_S {time.monotonic() - t0:.3f}")
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
     spark.stop()
 
 
 def run_scaling(pages_path: str, n_pages: int) -> dict:
-    import re
-    import subprocess
-
-    # Default N=2 vs 4N=8: this sandbox is a shared 32-thread host (host
-    # loadavg ~11 from other tenants; 16 physical cores) where a CPU-bound
-    # job measures at best 2.4× from 8→32 threads but a clean 4.0× from
-    # 2→8 — see BENCH.md for the calibration. Override via
-    # SPARK_GRAFT_SCALE_CORES="8,32".
+    # Default legs N = hi // 4 vs 4N = hi, hi = min(8, CPUS): the hi leg
+    # never oversubscribes the host, and on a shared many-core host a
+    # CPU-bound job measured at best 2.4× from 8→32 threads but a clean
+    # 4.0× from 2→8 — see BENCH.md for the calibration. Override via
+    # SPARK_GRAFT_SCALE_CORES="lo,hi".
+    hi = min(8, CPUS)
     lo, hi = (
-        int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_CORES", "2,8").split(",")
+        int(x)
+        for x in os.environ.get(
+            "SPARK_GRAFT_SCALE_CORES", f"{max(1, hi // 4)},{hi}"
+        ).split(",")
     )
     repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "2"))
     out: dict = {"pages": n_pages, "cores_lo": lo, "cores_hi": hi,
                  "repeats": repeats}
-    import shutil as _shutil
-
     for tag, cores in (("lo", lo), ("hi", hi)):
-        walls = []
-        for _ in range(repeats):
-            cmd = [sys.executable, os.path.abspath(__file__), "--scale-worker",
-                   str(cores), pages_path]
-            if _shutil.which("taskset"):
-                # pin the JVM to exactly `cores` CPUs: an unpinned
-                # local[2] JVM still runs GC/JIT/shuffle-IO threads on
-                # spare host cores, inflating low-core throughput and
-                # understating the true scaling ratio
-                cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-            proc = subprocess.run(
-                cmd, capture_output=True, text=True, timeout=3600,
-            )
-            m = re.search(r"WALL_S ([0-9.]+)", proc.stdout)
-            if not m:
-                raise RuntimeError(
-                    f"scaling worker ({cores} cores) failed:\n{proc.stdout[-2000:]}"
-                    f"\n{proc.stderr[-2000:]}"
-                )
-            walls.append(float(m.group(1)))
+        walls = [
+            float(_run_pinned(
+                ["--scale-worker", str(cores), pages_path], cores,
+                r"WALL_S ([0-9.]+)",
+            ))
+            for _ in range(repeats)
+        ]
         # best-of-N: the host is shared (tenant loadavg ~5-15), so min wall
         # = the least-interfered measurement of the job's own cost
         wall = min(walls)
@@ -267,8 +237,7 @@ def main() -> None:
             split_pages_gold,
         )
 
-        spark = _session(CPUS, "bench-gen")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = bench_session("bench-gen")
         shutil.rmtree(pages_path, ignore_errors=True)
         pages, _ = split_pages_gold(generate_corpus_dist(spark, SCALE_PAGES))
         pages.write.mode("overwrite").parquet(pages_path)

@@ -1,5 +1,5 @@
 """Coreference evaluators beyond the pairwise cell: full Blanc, CEAF-e,
-and linking micro/macro F1 — the reference's complete evaluator suite
+and linking macro F1 — the reference's evaluator suite
 (reference: latest/tools/evaluators.py:61-132 Blanc, :135-155 CEAF-e,
 :158-206 linking F1), re-derived as distributed DataFrame computations.
 
@@ -17,8 +17,8 @@ Design notes:
     (sklearn linear_assignment); this decomposition is what makes the
     same exact answer computable at corpus scale.
   * Linking F1 treats the label SETS on each mention (gold_refs vs
-    auto_refs) — the multi-membership (M5) view: micro = per-label
-    membership P/R/F, macro = global intersection counts.
+    auto_refs) — the multi-membership (M5) view: macro = global
+    intersection counts.
 
 Ambiguous labels (#other#, #general#) never co-refer (reference:
 latest/tools/state.py:28-34): gold clusters for those labels are per-
@@ -216,45 +216,6 @@ def _auto_labels(assignments: DataFrame, auto_refs_col: str) -> DataFrame:
         assignments.filter(F.col(auto_refs_col).isNotNull())
         .select("mention_uid", F.col(auto_refs_col).alias("label"))
         .distinct()
-    )
-
-
-def linking_micro_f1(
-    assignments: DataFrame, gold_mentions: DataFrame, auto_refs_col: str = "auto_refs"
-) -> DataFrame:
-    """Per-label linking P/R/F1 (reference evaluators.py:158-184):
-    membership of each label's gold vs auto mention sets. Defaults to the
-    pooled auto_refs view (reference parity); pass auto_refs_col="auto_ref"
-    for the stricter primary-label variant.
-    → DataFrame(label, n_gold, n_auto, n_correct, precision, recall, f1).
-    """
-    g = gold_mentions.select(
-        "mention_uid", F.explode("gold_refs").alias("label")
-    ).distinct()
-    a = _auto_labels(assignments, auto_refs_col)
-    gc = g.groupBy("label").agg(F.count("*").alias("n_gold"))
-    ac = a.groupBy("label").agg(F.count("*").alias("n_auto"))
-    cc = g.join(a, ["mention_uid", "label"]).groupBy("label").agg(
-        F.count("*").alias("n_correct")
-    )
-    out = (
-        gc.join(ac, "label", "full")
-        .join(cc, "label", "left")
-        .fillna(0, ["n_gold", "n_auto", "n_correct"])
-    )
-    p = F.when(F.col("n_auto") > 0, F.col("n_correct") / F.col("n_auto")).otherwise(0.0)
-    r = F.when(F.col("n_gold") > 0, F.col("n_correct") / F.col("n_gold")).otherwise(0.0)
-    return (
-        out.withColumn("precision", p)
-        .withColumn("recall", r)
-        .withColumn(
-            "f1",
-            F.when(
-                (F.col("precision") + F.col("recall")) > 0,
-                2 * F.col("precision") * F.col("recall")
-                / (F.col("precision") + F.col("recall")),
-            ).otherwise(0.0),
-        )
     )
 
 

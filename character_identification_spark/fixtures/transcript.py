@@ -1,4 +1,4 @@
-"""Reference-format transcript JSON → pages + gold_mentions adapter.
+"""Reference-format transcript JSON → utterances + gold_mentions adapter.
 
 Reads the *released* schema of the reference corpus
 (/root/reference/json/character-identification-{dev,tst}.json, documented at
@@ -19,7 +19,7 @@ Reference ingest semantics reproduced (re-derived, not copied):
     (reference: latest/tools/ioutils.py:54-68)
 
 Block key = scene_id — the reference's blocking unit (latest/system.py:46).
-One utterance becomes one pages row (url = https://fixture.test/<utt_id>).
+A mention's url is its utterance's (https://fixture.test/<utt_id>).
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from character_identification_spark.functions.hashing import h_long
-from character_identification_spark.ingest.extract import wrap_html
 
 _ENTITY = T.ArrayType(T.StringType())  # [begin, end, label...] as strings
 
@@ -97,21 +96,6 @@ def read_transcript_utterances(spark: SparkSession, path: str) -> DataFrame:
             F.col("u.tokens").alias("tokens"),
             F.col("u.character_entities").alias("character_entities"),
         )
-    )
-
-
-def transcript_pages(utterances: DataFrame) -> DataFrame:
-    """Utterances → pages(url, warc_ts, html, text, lang)."""
-    return utterances.select(
-        F.concat(F.lit("https://fixture.test/"), F.col("utterance_id")).alias("url"),
-        (
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=F.col("utt_idx"))
-        ).alias("warc_ts"),
-        F.col("transcript").alias("text"),
-        F.lit("en").alias("lang"),
-    ).withColumn("html", wrap_html(F.col("text"))).select(
-        "url", "warc_ts", "html", "text", "lang"
     )
 
 

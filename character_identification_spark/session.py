@@ -37,7 +37,7 @@ def get_spark(
 
     cores: parallelism for local mode (``local[cores]``); defaults to
     ``SPARK_GRAFT_CPUS``, else the CPUs this process may run on. The
-    benchmark harness passes 8 vs 32 to evidence the N→4N scaling criterion.
+    benchmark harness passes N vs 4N to evidence the scaling criterion.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cores, 8)

@@ -18,8 +18,9 @@ from character_identification_spark.streaming.incremental import incremental_att
 
 
 def _cluster_names(names):
-    """The batch name-level pipeline (bench._pipeline_assignments without
-    the mention stages)."""
+    """The batch name-level linkage of plans/pipeline.run_pipeline (blocks →
+    pairs → scores → CC → name clusters), store-less and without the
+    mention stages."""
     blocks = assign_blocks(names)
     pairs = generate_pairs(names, blocks, payload_cols=("norm",))
     scored = score_pairs(pairs, dedup_strings=False)

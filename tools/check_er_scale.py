@@ -86,13 +86,13 @@ def duck_assignment(con, max_rounds: int = 64) -> int:
 
 def main() -> None:
     import duckdb
-    from pyspark.sql import SparkSession
 
     from character_identification_spark import oracles
     from character_identification_spark.driver_contract import (
         q_er_clusters,
         q_er_entities,
     )
+    from character_identification_spark.session import get_spark
 
     argv = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
@@ -143,14 +143,7 @@ def main() -> None:
     t2 = time.monotonic()
     print(f"duckdb aggregates: {len(d_entities)} entities ({t2-t1:.1f}s)")
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-er-scale")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("check-er-scale", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     s_clusters = sorted(
         (r["mention_uid"], r["cluster_id"])

@@ -49,9 +49,9 @@ def row_sig(row, cols):
 
 def main():
     import duckdb
-    from pyspark.sql import SparkSession
 
     from __spark_entry__ import oracle_sql, queries
+    from character_identification_spark.session import get_spark
 
     argv = sys.argv[1:]
     json_path = None
@@ -62,14 +62,7 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-oracles")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("check-oracles", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -3,8 +3,9 @@
 Usage: python tools/dump_plans.py <tag-suffix> <query> [query ...]
 Writes plans/r06/<query>_<tag-suffix>.txt (e.g. tag 'before'/'after').
 
-Uses the same session knobs as bench.py so plan shapes (AQE, partition
-counts) match what the bench actually runs.
+Uses bench.py's session (``bench.bench_session``: ``get_spark`` plus
+``bench.BENCH_CONF``) so plan shapes (AQE, partition counts) match what the
+bench actually runs.
 """
 
 from __future__ import annotations
@@ -14,10 +15,8 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from pyspark.sql import SparkSession
+from bench import SF_DIR, bench_session
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "..", "plans", "r06"
 )
@@ -26,20 +25,7 @@ OUT_DIR = os.path.join(
 def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", str(4 * CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("dump-plans")
     from character_identification_spark.driver_contract import QUERIES
 
     os.makedirs(OUT_DIR, exist_ok=True)

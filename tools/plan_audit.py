@@ -32,18 +32,12 @@ def formatted_plan(df) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from character_identification_spark.driver_contract import QUERIES
+    from character_identification_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or AUDIT
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("plan-audit")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         plan = formatted_plan(QUERIES[name](spark, sf_dir))

@@ -44,6 +44,7 @@ def main() -> None:
         run_pipeline,
     )
 
+    # not session.get_spark: under spark-submit the launcher sets the master and confs
     spark = SparkSession.builder.appName("ck-spark-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     cfg = PipelineConfig(
