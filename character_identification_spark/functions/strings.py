@@ -156,34 +156,33 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
         codes, _ = pd.factorize(a.str.cat(b, sep="\x01"))
         _, first_idx = np.unique(codes, return_index=True)
         ua, ub = a.iloc[first_idx], b.iloc[first_idx]
-        try:
-            # fast path: ascii ≤64 chars → vectorized numpy batch.
-            # Rows are bucketed by their OWN max length before the batch
-            # kernel runs: _jaro_winkler_np pads every row to the batch
-            # max L and scans L² column pairs, so one 50-char outlier
-            # would make every 12-char pair pay a 16× larger scan. Row
-            # results are independent of batch composition (L only adds
-            # zero padding), so per-bucket evaluation is bit-identical —
-            # pinned by test_jw_udf_bucketing_matches_scalar.
-            la = ua.str.len().to_numpy()
-            lb = ub.str.len().to_numpy()
-            if (la.max(initial=0) or 0) <= 64 and (lb.max(initial=0) or 0) <= 64:
-                lens = np.maximum(la, lb)
-                uvals = np.empty(len(ua), dtype="float64")
-                done = np.zeros(len(ua), dtype=bool)
-                for bound in (8, 12, 16, 24, 32, 48, 64):
-                    sel = ~done & (lens <= bound)
-                    if sel.any():
-                        uvals[sel] = np.asarray(
-                            _jaro_winkler_np(ua[sel], ub[sel])
-                        )
-                        done |= sel
-                    if done.all():
-                        break
-            else:
-                raise UnicodeEncodeError("ascii", "", 0, 0, "too long")
-        except (UnicodeEncodeError, UnicodeDecodeError):
-            uvals = np.array([jaro_winkler(x, y) for x, y in zip(ua, ub)])
+        # fast path: ascii ≤64 chars → vectorized numpy batch. Rows that
+        # are not ascii or are longer than the kernel's 64-byte rows go to
+        # the scalar jaro_winkler one by one; the rest of the batch stays
+        # on the kernel. Kernel rows are bucketed by their OWN max length:
+        # _jaro_winkler_np pads every row to the batch max L and scans L²
+        # column pairs, so one 50-char outlier would make every 12-char
+        # pair pay a 16× larger scan. Row results are independent of batch
+        # composition (L only adds zero padding), so per-bucket evaluation
+        # is bit-identical — pinned by test_jw_udf_bucketing_matches_scalar
+        # and test_jw_udf_scalar_fallback_only_for_offending_rows.
+        la = ua.str.len().to_numpy()
+        lb = ub.str.len().to_numpy()
+        ascii_ = np.fromiter(
+            (x.isascii() and y.isascii() for x, y in zip(ua, ub)), bool, len(ua)
+        )
+        done = ~(ascii_ & (la <= 64) & (lb <= 64))
+        uvals = np.empty(len(ua), dtype="float64")
+        for i in np.flatnonzero(done):
+            uvals[i] = jaro_winkler(ua.iloc[i], ub.iloc[i])
+        lens = np.maximum(la, lb)
+        for bound in (8, 12, 16, 24, 32, 48, 64):
+            if done.all():
+                break
+            sel = ~done & (lens <= bound)
+            if sel.any():
+                uvals[sel] = np.asarray(_jaro_winkler_np(ua[sel], ub[sel]))
+                done |= sel
         # codes index into uniques in order of first appearance, which is
         # exactly np.unique(codes) since factorize assigns codes 0,1,2,…
         out[mask] = uvals[codes]

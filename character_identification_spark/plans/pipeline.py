@@ -30,12 +30,16 @@ everything.
 Metrics (stage, rows, wall_s, inputs) and lineage (stage, partition_id,
 rows) go to ``_meta_metrics`` / ``_meta_lineage`` — the north rule's
 per-partition lineage + metrics tables, and the distributed analog of the
-reference's Timer logging (reference: python/util/__init__.py:5-28). Each
-built stage buffers its rows in the StageStore; the run commits them once,
-one append per table, when it ends — also when a stage fails, so the rows
-of the stages that finished are kept. A hard-killed process (no
-``finally``) loses that run's meta rows, but its committed stage tables
-still let the next run resume.
+reference's Timer logging (reference: python/util/__init__.py:5-28). A
+built stage costs only its write: its lineage rows come from
+``StageStore.partition_rows`` (on parquet, the part-file footers, so
+``partition_id`` is the write task that produced a part file), its row
+count is their sum, and the table is read back with its footer schema, so
+none of this launches a Spark job. Each built stage buffers its rows in
+the StageStore; the run commits them once, one append per table, when it
+ends — also when a stage fails, so the rows of the stages that finished
+are kept. A hard-killed process (no ``finally``) loses that run's meta
+rows, but its committed stage tables still let the next run resume.
 """
 
 from __future__ import annotations
@@ -93,27 +97,22 @@ def _run_stage(store: StageStore, name: str, inputs: list[str], build, cfg: Pipe
     t0 = time.monotonic()
     df = build()
     store.write(df, name, tuple(cfg.partition_by.get(name, ())))
-    out = store.read(name)
-    # ONE scan of the committed table: the per-partition lineage aggregate
-    # is collected (tiny — one row per partition) and both the lineage
-    # rows and the stage row count derive from it, instead of three
-    # separate scans (lineage write, count, downstream read all re-reading)
-    lin = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows")
-    ).collect()
+    # the committed table's per-partition row counts come from the store
+    # (parquet: its part-file footers, no Spark job), and the stage row
+    # count is their sum — the table just written is never scanned here
+    lin = store.partition_rows(name)
     wall = time.monotonic() - t0
     store.buffer(
         "_meta_lineage",
         "stage string, partition_id int, rows long",
-        [(name, int(r["partition_id"]), int(r["rows"])) for r in lin],
+        [(name, pid, rows) for pid, rows in lin],
     )
-    n = sum(r["rows"] for r in lin)
     store.buffer(
         "_meta_metrics",
         "stage string, rows long, wall_s double, inputs string",
-        [(name, n, float(wall), ",".join(inputs))],
+        [(name, sum(rows for _, rows in lin), float(wall), ",".join(inputs))],
     )
-    return out
+    return store.read(name)
 
 
 def run_pipeline(
@@ -226,17 +225,19 @@ def _pipeline_stages(store: StageStore, pages: DataFrame, cfg: PipelineConfig) -
         cfg,
     )
     caches: list = []
-    assignments = _run_stage(
-        store,
-        "assignments",
-        ["name_clusters", "edge_split", "mentions"],
-        lambda: resolve_in_context(
-            mentions, name_clusters, amb_links, cache_registry=caches
-        ),
-        cfg,
-    )
-    for c in caches:  # stage table is committed — drop the helper cache
-        c.unpersist()
+    try:
+        assignments = _run_stage(
+            store,
+            "assignments",
+            ["name_clusters", "edge_split", "mentions"],
+            lambda: resolve_in_context(
+                mentions, name_clusters, amb_links, cache_registry=caches
+            ),
+            cfg,
+        )
+    finally:  # committed or failed, the helper cache is not needed again
+        for c in caches:
+            c.unpersist()
     entities = _run_stage(
         store,
         "entities",

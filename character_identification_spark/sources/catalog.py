@@ -18,15 +18,35 @@ Run metadata (the pipelines' ``_meta_*`` rows) is not appended as it is
 produced: ``buffer`` holds it for the run and ``commit_buffered`` appends
 each table's rows in one write, so a run costs one append (one Iceberg
 snapshot) per meta table however many stages it builds.
+
+A committed parquet table is described by its own part-file footers, read
+on the driver with pyarrow, so neither fact below costs a Spark job:
+- its schema: Spark writes it into every part file under
+  ``org.apache.spark.sql.parquet.row.metadata``. ``read`` hands it to
+  ``spark.read.schema``, so Spark runs no schema-inference job. Partition
+  columns are still discovered from the directory names.
+- its rows per partition (``partition_rows``): the footers' ``num_rows``
+  summed by the write-task index in the ``part-NNNNN-`` file name. So
+  ``partition_id`` in ``_meta_lineage`` names the task that wrote the rows,
+  i.e. the table's own part files, not a reader's split. An Iceberg table
+  gets the same rows from a scan aggregate over ``spark_partition_id()``.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+from collections import Counter
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from character_identification_spark.session import local_frame
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_PART_FILE = re.compile(r"part-(\d+)-")
 
 
 class StageStore:
@@ -42,6 +62,21 @@ class StageStore:
     # -- parquet fallback paths ------------------------------------------
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _part_files(self, name: str) -> list[tuple[int, str]]:
+        """(write-task index, path) of each part file of parquet table
+        ``name``, in partition directories too; skips the directories Spark's
+        file listing skips (``.x``, and ``_x`` unless it has an ``=``)."""
+        files = []
+        for top, dirs, names in os.walk(self._path(name)):
+            dirs[:] = sorted(
+                d for d in dirs if not (d.startswith(".") or (d.startswith("_") and "=" not in d))
+            )
+            for f in sorted(names):
+                m = _PART_FILE.match(f)
+                if m:
+                    files.append((int(m.group(1)), os.path.join(top, f)))
+        return files
 
     def exists(self, name: str) -> bool:
         if self.catalog:
@@ -87,7 +122,25 @@ class StageStore:
     def read(self, name: str) -> DataFrame:
         if self.catalog:
             return self.spark.table(f"{self.catalog}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        files = self._part_files(name)
+        meta = (pq.read_metadata(files[0][1]).metadata or {}) if files else {}
+        reader = self.spark.read
+        if _SPARK_SCHEMA_KEY in meta:
+            reader = reader.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY])))
+        return reader.parquet(self._path(name))
+
+    def partition_rows(self, name: str) -> list[tuple[int, int]]:
+        """(partition_id, rows) of committed table ``name``, by write task
+        (parquet footers) or by scan partition (Iceberg)."""
+        if self.catalog:
+            from pyspark.sql import functions as F
+
+            lin = self.read(name).groupBy(F.spark_partition_id()).count().collect()
+            return sorted((int(p), int(n)) for p, n in lin)
+        rows: Counter = Counter()
+        for task, path in self._part_files(name):
+            rows[task] += pq.read_metadata(path).num_rows
+        return sorted(rows.items())
 
     def delete(self, name: str) -> None:
         if self.catalog:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 from collections import Counter
 
 import pytest
@@ -149,6 +150,72 @@ def test_failed_stage_commits_finished_meta_and_resumes(
     lineage = _table(spark, tmp_workdir, "_meta_lineage")
     assert lineage.groupBy("stage", "partition_id").count().filter("count > 1").count() == 0
     assert evaluate_pipeline(res, gold)["f1"] >= 0.99
+
+
+def test_stage_facts_come_from_footers_without_spark_jobs(
+    spark, small_corpus, tmp_workdir, monkeypatch
+):
+    """On a forced run, everything _run_stage does after a stage's write
+    (lineage rows, row count, reading the table back) launches no Spark
+    job, yet each stage's lineage sums to an independent count of its
+    committed table and the table reads back with the schema Spark would
+    infer."""
+    pages, _ = small_corpus
+    sc = spark.sparkContext
+    probe = f"after-write-{uuid.uuid4().hex}"
+    orig_write, orig_run = StageStore.write, pipeline._run_stage
+
+    def write(self, df, name, partition_by=()):
+        orig_write(self, df, name, partition_by)
+        sc.setJobGroup(f"{probe}-{name}", "after the stage write")
+
+    def run_stage(*args):
+        try:
+            return orig_run(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(StageStore, "write", write)
+    monkeypatch.setattr(pipeline, "_run_stage", run_stage)
+    run_pipeline(spark, pages, tmp_workdir, PipelineConfig(force=True))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = {s: list(sc.statusTracker().getJobIdsForGroup(f"{probe}-{s}")) for s in STAGES}
+    assert jobs == {s: [] for s in STAGES}
+
+    lineage = _table(spark, tmp_workdir, "_meta_lineage")
+    sums = {
+        r["stage"]: r["n"]
+        for r in lineage.groupBy("stage").agg(F.sum("rows").alias("n")).collect()
+    }
+    store = StageStore(spark, tmp_workdir)
+    for stage in STAGES:
+        committed = _table(spark, tmp_workdir, stage)
+        assert sums[stage] == committed.count(), stage
+        assert store.read(stage).schema == committed.schema, stage
+
+
+def test_failed_assignments_write_drops_helper_cache(
+    spark, small_corpus, tmp_workdir, monkeypatch
+):
+    """resolve_in_context's helper cache is unpersisted also when the
+    assignments write raises, so a long-lived session keeps no cached plan."""
+    pages, gold = small_corpus
+    orig_write = StageStore.write
+
+    def write(self, df, name, partition_by=()):
+        if name == "assignments":
+            raise RuntimeError("assignments write failed")
+        orig_write(self, df, name, partition_by)
+
+    monkeypatch.setattr(StageStore, "write", write)
+    spark.catalog.clearCache()
+    try:
+        with pytest.raises(RuntimeError, match="assignments write failed"):
+            run_pipeline(spark, pages, tmp_workdir, _cfg())
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:  # the session-wide corpus fixture was cached: restore that
+        pages.cache()
+        gold.cache()
 
 
 def test_resume_mid_stage(spark, small_corpus, tmp_workdir):

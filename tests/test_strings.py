@@ -87,6 +87,46 @@ def test_jw_udf_bucketing_matches_scalar(spark):
                 r["a"], r["b"])
 
 
+def test_jw_udf_scalar_fallback_only_for_offending_rows(monkeypatch):
+    """A batch mixing ascii ≤64-char pairs with non-ascii and >64-char
+    ones: the scalar loop computes only the offending (unique) pairs, the
+    rest stay on the numpy kernel, and every value is bit-identical to the
+    scalar reference."""
+    import pandas as pd
+
+    from character_identification_spark.functions import strings
+
+    offending = [
+        ("josé garcía", "jose garcia"),        # non-ascii left
+        ("zoe", "zoë"),                        # non-ascii right
+        ("d" * 65, "d" * 64 + "e"),            # >64 chars
+        ("short", "s" * 70),                   # >64 chars on one side
+    ]
+    ascii_pairs = [
+        ("rossgeller", "rossgellar"),
+        ("chandler bing", "chandler bong"),
+        ("a" * 24, "a" * 23 + "q"),
+        ("c" * 64, "c" * 63 + "d"),            # boundary 64 stays fast
+        ("", "abc"),
+    ]
+    batch = ascii_pairs[:2] + offending[:2] + ascii_pairs[2:] + offending[2:]
+    batch += [offending[0], ascii_pairs[0]]    # duplicates: computed once
+    scalar = strings.jaro_winkler
+    seen: list = []
+
+    def spy(a, b):
+        seen.append((a, b))
+        return scalar(a, b)
+
+    monkeypatch.setattr(strings, "jaro_winkler", spy)
+    got = jaro_winkler_udf.func(
+        pd.Series([a for a, _ in batch]), pd.Series([b for _, b in batch])
+    )
+    assert sorted(seen) == sorted(offending)
+    for (a, b), g in zip(batch, got):
+        assert g == scalar(a, b), (a, b)
+
+
 def test_vectorized_jw_matches_scalar_property():
     """The numpy batch Jaro-Winkler must be bit-identical to the scalar
     reference implementation (which is itself DuckDB-compatible)."""
