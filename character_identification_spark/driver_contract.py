@@ -22,9 +22,10 @@ the pairwise-F1 ≥ 0.99 gate lives in tests/ (test_pipeline.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from character_identification_spark.functions.partitioning import topk_per_group
 from character_identification_spark.functions.strings import norm_text
 from character_identification_spark.operators.asof import asof_join, last_prior_event
 from character_identification_spark.operators.blocking import (
@@ -1341,14 +1342,9 @@ def q_eval_linking_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("entity"),
     )
     cell = m.groupBy("cluster_id", "entity").agg(F.count("*").alias("n"))
-    wmaj = Window.partitionBy("cluster_id").orderBy(
-        F.col("n").desc(), F.col("entity").asc()
-    )
-    maj = (
-        cell.withColumn("_rk", F.row_number().over(wmaj))
-        .filter(F.col("_rk") == 1)
-        .select("cluster_id", F.col("entity").alias("pred"))
-    )
+    maj = topk_per_group(
+        cell, ["cluster_id"], [F.col("n").desc(), F.col("entity").asc()], 1
+    ).select("cluster_id", F.col("entity").alias("pred"))
     pred = m.join(maj, "cluster_id").select("vec_id", "entity", "pred")
     gold_n = pred.groupBy("entity").agg(F.count("*").alias("gn"))
     pred_n = pred.groupBy("pred").agg(F.count("*").alias("an"))
@@ -1614,17 +1610,10 @@ def q_order_enrich_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_top_orders_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-1-per-group window (SURVEY §2 W5) generalized to top-3."""
-    from pyspark.sql import Window
-
     orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rk")
-    )
+    return topk_per_group(
+        orders, ["o_custkey"], [F.desc("o_totalprice"), F.asc("o_orderkey")], 3, "rk"
+    ).select("o_custkey", "o_orderkey", "o_totalprice", "rk")
 
 
 def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,9 +31,9 @@ def l2_norm(a: Column | str) -> Column:
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
     """NULL (not NaN) when either vector has zero norm: NULLs sort LAST
     under every desc rank window AND match DuckDB, whose division by zero
-    yields NULL — so the exact two-phase top-k reductions (pandas
-    na_position='last', array_sort) and the final F.desc windows agree on
-    zero-norm rows instead of inverting their order."""
+    yields NULL — so the array_sort nearest-centroid picks and the F.desc
+    top-k windows (and their partial group limits) agree on zero-norm
+    rows instead of inverting their order."""
     na, nb = l2_norm(a), l2_norm(b)
     return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb))
 

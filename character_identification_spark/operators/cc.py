@@ -83,7 +83,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    checkpoint_every: int = 1,
     converge_check_every: int = 1,
 ) -> DataFrame:
     """edges(u, v) → assignments(node, component) where component is the
@@ -112,9 +111,7 @@ def connected_components(
     its parents still await merging."""
     cur = _orient(edges).localCheckpoint(eager=True)
     for i in range(max_iter):
-        cur = _small_star(_large_star(cur))
-        if checkpoint_every and (i % checkpoint_every == 0):
-            cur = cur.localCheckpoint(eager=True)
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         if (i + 1) % converge_check_every and i + 1 < max_iter:
             continue
         ends = cur.select(

@@ -27,8 +27,10 @@ curation stack needs (SemDeDup's own step 1 is exactly this k-means).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from character_identification_spark.functions.partitioning import topk_per_group
 
 MICROS = 1_000_000.0
 
@@ -330,9 +332,9 @@ def pq_topk(
     tables (queries × n_blocks × k_codebook ints) broadcast; scoring is
     a zero-shuffle projection of integer lookups + adds — exact replay
     on both engines since every table entry and code is an integer.
-    The final per-query rank is a window over the scored rows; at real
-    scale the two-phase per-partition top-k reduction (similarity.
-    cosine_topk's shape) slots in front unchanged.
+    The final per-query rank is topk_per_group over the scored rows: the
+    planner keeps ≤ k rows per query in each map task before the rank
+    shuffle (a Partial WindowGroupLimit), as in similarity.cosine_topk.
     """
     base = emb.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -355,11 +357,8 @@ def pq_topk(
         F.col("_id").alias("neighbor_id"),
         _adc_score().alias("approx_micros"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("approx_micros"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return topk_per_group(
+        scored, [query_id_col], [F.asc("approx_micros"), F.asc("neighbor_id")], k, "rank"
     )
 
 
@@ -495,9 +494,6 @@ def ivfpq_topk(
         F.col("_id").alias("neighbor_id"),
         _adc_score().alias("approx_micros"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("approx_micros"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return topk_per_group(
+        scored, [query_id_col], [F.asc("approx_micros"), F.asc("neighbor_id")], k, "rank"
     )

@@ -28,8 +28,10 @@ stage).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from character_identification_spark.functions.partitioning import topk_per_group
 
 
 def ambiguous_col(norm_col: Column | str = "norm") -> Column:
@@ -212,10 +214,9 @@ def resolve_in_context(
         .groupBy("ctx", "anchor_cluster")
         .agg(F.count("*").alias("w"))
     )
-    wcap = Window.partitionBy("ctx").orderBy(F.desc("w"), F.asc("anchor_cluster"))
-    anchors = anchors.withColumn("r", F.row_number().over(wcap)).filter(
-        F.col("r") <= max_anchors_per_ctx
-    ).drop("r")
+    anchors = topk_per_group(
+        anchors, ["ctx"], [F.desc("w"), F.asc("anchor_cluster")], max_anchors_per_ctx
+    )
 
     # which clusters each ambiguous name is compatible with (global table,
     # reuses the blocked+scored pair evidence)
@@ -235,14 +236,9 @@ def resolve_in_context(
         .join(compat, "name_uid")
         .join(anchors, ["ctx", "anchor_cluster"])
     )
-    wpick = Window.partitionBy("mention_uid").orderBy(
-        F.desc("w"), F.asc("anchor_cluster")
-    )
-    picked = (
-        cand.withColumn("r", F.row_number().over(wpick))
-        .filter(F.col("r") == 1)
-        .select("mention_uid", F.col("anchor_cluster").alias("ctx_cluster"))
-    )
+    picked = topk_per_group(
+        cand, ["mention_uid"], [F.desc("w"), F.asc("anchor_cluster")], 1
+    ).select("mention_uid", F.col("anchor_cluster").alias("ctx_cluster"))
     resolved = (
         hard.join(picked, "mention_uid", "left")
         .withColumn("cluster_id", F.coalesce(F.col("ctx_cluster"), F.col("cluster_id")))

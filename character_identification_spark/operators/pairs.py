@@ -52,7 +52,6 @@ def match_edges_sparse(
     mentions: DataFrame,
     assign: DataFrame,
     threshold: float,
-    materialize: bool = True,
 ) -> DataFrame:
     """Connectivity-equivalent sparse match graph (round-6 perf): edges(u, v)
     whose connected components are EXACTLY those of the full blocked pair
@@ -81,12 +80,12 @@ def match_edges_sparse(
     and the scorer's pandas UDF sees vocabulary pairs only. Output may
     repeat an edge across blocks — connected_components dedups on entry.
 
-    ``materialize`` localCheckpoints the two multiply-consumed
-    intermediates (the windowed assignment feeds stars + both rep-join
-    sides; rp feeds the scorer and the edge join) — like
-    connected_components, the call then runs eagerly. Measured: whole
-    edges+CC segment 14.9 → 9.0 s cold / 9.4 → 8.9 s warm at sf0.1
-    (the cold delta is the duplicated subtrees' codegen).
+    The two multiply-consumed intermediates are localCheckpointed (the
+    windowed assignment feeds stars + both rep-join sides; rp feeds the
+    scorer and the edge join) — like connected_components, the call runs
+    eagerly. Measured: whole edges+CC segment 14.9 → 9.0 s cold / 9.4 →
+    8.9 s warm at sf0.1 (the cold delta is the duplicated subtrees'
+    codegen).
     """
     from character_identification_spark.operators.scoring import _score_strings
 
@@ -98,9 +97,7 @@ def match_edges_sparse(
     a = normed.filter(F.col("norm").isNotNull()).withColumn(
         "rep",
         F.min("mention_uid").over(Window.partitionBy("block_key", "norm")),
-    )
-    if materialize:
-        a = a.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     stars = a.filter(F.col("mention_uid") != F.col("rep")).select(
         F.col("mention_uid").alias("u"), F.col("rep").alias("v")
     )
@@ -116,9 +113,8 @@ def match_edges_sparse(
         .filter(F.col("uid1") < F.col("uid2"))
         .select("uid1", "uid2", "norm_1", "norm_2")
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        rp = rp.localCheckpoint(eager=True)
     matched = (
         _score_strings(rp.select("norm_1", "norm_2").distinct(), threshold)
         .filter(F.col("is_match"))

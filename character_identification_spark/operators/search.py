@@ -23,8 +23,10 @@ text — pure, and identical in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from character_identification_spark.functions.partitioning import topk_per_group
 
 
 def bm25_search(
@@ -83,14 +85,12 @@ def bm25_search(
             F.round(F.sum("term_score"), 6).alias("score"),
         )
     )
-    # global top-k via orderBy+limit = TakeOrderedAndProject (per-partition
-    # top-k, tiny driver merge) — no single-partition rank shuffle of the
-    # full match set; the rank window then runs over ≤ k rows.
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "doc_id", "n_terms_hit", "score", "rank"
-    )
+    # a global rank filter: the planner turns it into TakeOrderedAndProject
+    # (per-partition top-k, tiny driver merge) — no single-partition rank
+    # shuffle of the full match set; the rank window runs over ≤ k rows.
+    return topk_per_group(
+        scored, [], [F.desc("score"), F.asc("doc_id")], k, "rank"
+    ).select("doc_id", "n_terms_hit", "score", "rank")
 
 
 def rrf_fuse(
@@ -136,9 +136,6 @@ def rrf_fuse(
             * 1_000_000.0
         ).cast("long"),
     )
-    w = Window.orderBy(F.desc("rrf_micros"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("doc_id", "rank_lexical", "rank_semantic", "rrf_micros", "rank")
-    )
+    return topk_per_group(
+        fused, [], [F.desc("rrf_micros"), F.asc("doc_id")], top_k, "rank"
+    ).select("doc_id", "rank_lexical", "rank_semantic", "rrf_micros", "rank")

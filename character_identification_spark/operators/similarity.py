@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.hashing import h_long
+from character_identification_spark.functions.partitioning import topk_per_group
 from character_identification_spark.functions.vectors import cosine_sim
 
 
@@ -110,38 +111,11 @@ def cosine_topk(
         .select("query_id", "neighbor_id", "cos_sim")
     )
 
-    # Two-phase exact top-k: a per-partition running top-k reduction
-    # (Arrow-batched mapInPandas over the three scalar columns — scoring
-    # itself stays JVM-side/codegen) shrinks each partition to ≤ k rows per
-    # query BEFORE the rank shuffle, so the final window moves at most
-    # k × partitions rows per query instead of the whole scored corpus.
-    # Exactness: per-partition top-k under the same total order
-    # (cos_sim desc, neighbor_id asc) always contains the global top-k.
-    import pandas as pd  # noqa: F401 — imported in the driver for the closure
-
-    def _partial_topk(batches):
-        import pandas as _pd
-
-        best = None
-        for pdf in batches:
-            cur = pdf if best is None else _pd.concat([best, pdf], ignore_index=True)
-            cur = cur.sort_values(
-                ["query_id", "cos_sim", "neighbor_id"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            best = cur.groupby("query_id", sort=False).head(k)
-        if best is not None:
-            yield best
-
-    reduced = scored.mapInPandas(_partial_topk, scored.schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        reduced.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    # exact top-k per query: the planner runs a Partial WindowGroupLimit
+    # in each map task, so at most k rows per (query, partition) reach the
+    # rank shuffle — never the whole scored corpus (see topk_per_group)
+    return topk_per_group(
+        scored, ["query_id"], [F.desc("cos_sim"), F.asc("neighbor_id")], k, "rank"
     )
 
 
@@ -224,12 +198,9 @@ def ivf_topk(
         F.col("neighbor_id") != F.col("query_id")
     )
     scored = cand.withColumn("cos_sim", cosine_sim("cv", "qv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return topk_per_group(
+        scored, ["query_id"], [F.desc("cos_sim"), F.asc("neighbor_id")], k, "rank"
+    ).select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
 def ann_candidates(
@@ -426,12 +397,9 @@ def ann_topk(
         max_bucket_size=max_bucket_size,
     )
     scored = cand.withColumn("cos_sim", cosine_sim("cv", "qv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return topk_per_group(
+        scored, ["query_id"], [F.desc("cos_sim"), F.asc("neighbor_id")], k, "rank"
+    ).select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
 def knn_graph(

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from character_identification_spark.functions.partitioning import topk_per_group
 from character_identification_spark.ingest.extract import extracted_pages
 from character_identification_spark.ingest.mentions import extract_mentions
 
@@ -251,8 +252,6 @@ def current_base(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the streaming-attach state: the seed base plus every batch's
     accepted assignments, with reassignment overrides applied (later
     batches win per mention — max batch id)."""
-    from pyspark.sql import Window
-
     base = spark.read.parquet(os.path.join(state_dir, "base"))
     re_dir = os.path.join(state_dir, "reassigned")
     parts = [base]
@@ -262,11 +261,8 @@ def current_base(spark: SparkSession, state_dir: str) -> DataFrame:
     ):
         parts.append(spark.read.parquet(re_dir))
     allrows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    w = Window.partitionBy("mention_uid").orderBy(F.desc("batch"))
-    return (
-        allrows.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("mention_uid", "norm", "cluster_id")
+    return topk_per_group(allrows, ["mention_uid"], [F.desc("batch")], 1).select(
+        "mention_uid", "norm", "cluster_id"
     )
 
 

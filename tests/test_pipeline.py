@@ -243,3 +243,42 @@ def test_entities_canonicalization(spark, small_corpus, tmp_workdir):
     # mention mass is conserved
     total = res["assignments"].count()
     assert ents.agg(F.sum("n_mentions")).collect()[0][0] == total
+
+
+def test_name_key_128_bits_gives_the_same_partition(spark, small_corpus, tmp_path):
+    """The 128-bit (md5 hex) name key is the documented fallback for
+    vocabularies where 60-bit keys collide: it must link the mentions
+    into exactly the partition the 60-bit key gives."""
+    pages, _ = small_corpus
+
+    def clusters(bits):
+        res = run_pipeline(
+            spark, pages, str(tmp_path / f"k{bits}"),
+            PipelineConfig(force=True, name_key_bits=bits),
+        )
+        return res["assignments"].select(
+            "mention_uid", F.col("cluster_id").alias(f"c{bits}")
+        )
+
+    c60, c128 = clusters(60), clusters(128)
+    assert dict(c128.dtypes)["c128"] == "string"
+    both = c60.join(c128, "mention_uid")
+    n60, n128, n_both = c60.count(), c128.count(), both.count()
+    assert n60 == n128 == n_both > 0
+    d = both.agg(
+        F.count_distinct("c60").alias("d60"),
+        F.count_distinct("c128").alias("d128"),
+        F.count_distinct("c60", "c128").alias("pairs"),
+    ).first()
+    # a bijection between the two labelings: same clusters, other names
+    assert d["d60"] == d["d128"] == d["pairs"], d
+
+
+def test_name_key_collision_fails_loudly(spark, small_corpus, tmp_workdir, monkeypatch):
+    """A colliding 60-bit name key must trip the injectivity gate, not
+    silently fuse distinct names into one linkage node."""
+    pages, _ = small_corpus
+    monkeypatch.setattr(pipeline, "h_long", lambda c: F.pmod(F.length(c), F.lit(2)).cast("long"))
+    with pytest.raises(RuntimeError, match="name-key collision"):
+        run_pipeline(spark, pages, tmp_workdir, PipelineConfig(force=True))
+    assert not os.path.exists(os.path.join(tmp_workdir, "block_assign"))

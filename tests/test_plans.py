@@ -150,11 +150,11 @@ def test_ivf_list_build_no_exchange(spark):
 
 @needs_data
 def test_cosine_topk_is_two_phase(spark):
-    """Brute-force cosine top-k must reduce per-partition (MapInPandas
-    running top-k) BEFORE the rank shuffle: the single hashpartitioning
-    Exchange sits ABOVE the MapInPandas reducer in the plan tree, so only
-    ≤ k rows per (query, partition) ever cross the wire — not the whole
-    scored corpus."""
+    """Brute-force cosine top-k must reduce per partition BEFORE the rank
+    shuffle, and the reduction is the planner's own: a Partial
+    WindowGroupLimit sits below the single hashpartitioning Exchange, so
+    only ≤ k rows per (query, partition) ever cross the wire — and no
+    Python node (the old MapInPandas reducer) is left in the plan."""
     from character_identification_spark.driver_contract import QUERIES
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -162,11 +162,56 @@ def test_cosine_topk_is_two_phase(spark):
         plan = plan_of(QUERIES["similarity_topk"](spark, SF), mode="simple")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert "MapInPandas" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "MapInPandas" in plan
-    # tree prints root-first: the Exchange (ancestor) appears before the
-    # MapInPandas (descendant) → the reduction feeds the shuffle
-    assert plan.index("Exchange hashpartitioning") < plan.index("MapInPandas"), plan
+    lines = plan.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln)
+    partial = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+    ]
+    # tree prints root-first: the Partial limit (descendant) prints after
+    # the Exchange (ancestor) → the reduction feeds the shuffle
+    assert partial and partial[0] > exchange, plan
+
+
+def test_topk_per_group_keyed_plans_partial_limit_below_exchange(spark):
+    """Keyed k ≤ windowGroupLimitThreshold (1000): WindowGroupLimit Partial
+    → Exchange → WindowGroupLimit Final, the Partial limit printed below
+    the Exchange. Above the threshold no group limit is planned."""
+    from character_identification_spark.functions.partitioning import topk_per_group
+
+    df = spark.range(3000).select((F.col("id") % 7).alias("g"), "id")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = plan_of(topk_per_group(df, ["g"], [F.desc("id")], 1000), mode="simple")
+        over = plan_of(topk_per_group(df, ["g"], [F.desc("id")], 1001), mode="simple")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    lines = plan.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln)
+    limits = {
+        ln.rstrip().rsplit(" ", 1)[-1]: i
+        for i, ln in enumerate(lines) if "WindowGroupLimit" in ln
+    }
+    assert limits.keys() == {"Partial", "Final"}, plan
+    assert limits["Final"] < exchange < limits["Partial"], plan
+    assert "WindowGroupLimit" not in over, over
+
+
+def test_topk_per_group_global_plans_take_ordered(spark):
+    """No keys: TakeOrderedAndProject (per-partition top-k plus a driver
+    merge), no single-partition rank shuffle."""
+    from character_identification_spark.functions.partitioning import topk_per_group
+
+    df = spark.range(3000).select((F.col("id") % 7).alias("g"), "id")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = plan_of(topk_per_group(df, [], [F.desc("g"), F.asc("id")], 7, "rank"), mode="simple")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert "TakeOrderedAndProject(limit=7" in plan, plan
+    assert "Exchange SinglePartition" not in plan, plan
 
 
 @needs_data

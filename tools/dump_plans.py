@@ -11,6 +11,7 @@ bench actually runs.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
@@ -20,6 +21,20 @@ from bench import SF_DIR, bench_session
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "..", "plans", "r06"
 )
+
+# every physical node that runs Python on the executors: scalar and
+# pandas UDF evaluation plus the map / grouped-map / stateful pandas and
+# Arrow nodes
+PYTHON_NODES = frozenset((
+    "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
+    "FlatMapGroupsInPandas", "FlatMapGroupsInPandasWithState",
+))
+
+
+def python_nodes(plan: str) -> int:
+    """Count the Python-running nodes of a formatted physical plan, once
+    each (by its ``(N) Name`` detail header)."""
+    return sum(n in PYTHON_NODES for n in re.findall(r"^\(\d+\) (\w+)", plan, re.M))
 
 
 def main() -> None:
@@ -38,8 +53,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange, "
-              f"{plan.count('BatchEvalPython') + plan.count('ArrowEvalPython')}"
-              f" PyEval)")
+              f"{python_nodes(plan)} PyEval)")
     spark.stop()
 
 
