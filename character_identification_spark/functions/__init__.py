@@ -1,10 +1,8 @@
 from character_identification_spark.functions.hashing import (  # noqa: F401
     h_hex,
     h_long,
-    seeded_hex,
     dd_h_hex,
     dd_h_long,
-    dd_seeded_hex,
 )
 from character_identification_spark.functions.strings import (  # noqa: F401
     norm_text,

@@ -7,9 +7,8 @@ pure function of its inputs via md5, chosen because BOTH Spark and DuckDB
 expose an identical md5() — so the same expression is computable in the
 engine and in the SQL oracle, making value-level correctness checks exact.
 
-Key trick: a fixed-width lowercase-hex md5 prefix orders lexicographically
-exactly as its numeric value, so MinHash "min over hashes" works directly on
-hex strings with no integer conversion on either side.
+A fixed-width lowercase-hex md5 prefix orders lexicographically exactly as
+its numeric value, so a min over hex strings is a min over the hashes.
 
 ``dd_*`` helpers emit the equivalent DuckDB SQL text for oracle queries.
 """
@@ -33,12 +32,6 @@ def h_long(col: Column | str, width: int = HEX_WIDTH) -> Column:
     return F.conv(h_hex(col, width), 16, 10).cast("long")
 
 
-def seeded_hex(seed: int, col: Column | str, width: int = HEX_WIDTH) -> Column:
-    """Family of hash functions indexed by an integer seed (for MinHash)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(F.md5(F.concat(F.lit(f"{seed}|"), c.cast("string"))), 1, width)
-
-
 # --- DuckDB SQL text equivalents (for oracle_sql) ---------------------------
 
 def dd_h_hex(expr: str, width: int = HEX_WIDTH) -> str:
@@ -47,7 +40,3 @@ def dd_h_hex(expr: str, width: int = HEX_WIDTH) -> str:
 
 def dd_h_long(expr: str, width: int = HEX_WIDTH) -> str:
     return f"CAST(CAST('0x' || {dd_h_hex(expr, width)} AS UBIGINT) AS BIGINT)"
-
-
-def dd_seeded_hex(seed: int, expr: str, width: int = HEX_WIDTH) -> str:
-    return f"substr(md5('{seed}|' || CAST({expr} AS VARCHAR)), 1, {width})"

@@ -10,9 +10,9 @@ blocks come from the mention strings themselves, per the north rule:
 
 union'd, so string-similar names land in ≥1 shared block with high
 probability. Everything is expressed as DataFrame ops over md5-derived
-hashes (see functions/hashing.py): deterministic across runs, partitions,
-and parallelism levels — unlike pyspark.ml's MinHashLSH whose random
-hyperplanes depend on a driver RNG seed object.
+hashes (see functions/hashing.py and functions/minhash.py): deterministic
+across runs, partitions, and parallelism levels — unlike pyspark.ml's
+MinHashLSH whose random hyperplanes depend on a driver RNG seed object.
 
 Skew: a hot key ("ross geller" at celebrity scale) makes pair generation
 quadratic in its block size. ``cap_block_sizes`` salts oversize blocks into
@@ -28,29 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from character_identification_spark.functions.hashing import h_long
-
-# Universal-hash MinHash family: h_i(x) = (a_i·x + b_i) mod P over ONE
-# md5-derived base value per shingle — 2^31-1 (Mersenne) keeps every
-# product under 2^62 so the arithmetic is exact (and ANSI-overflow-free)
-# in both engines. The classic Broder/Carter-Wegman construction; the
-# per-seed-md5 formulation it replaces cost num_hashes md5 calls per
-# shingle for no statistical benefit.
-MINHASH_P = (1 << 31) - 1
-
-
-def minhash_coefficients(num_hashes: int) -> tuple[list[int], list[int]]:
-    """(a_i, b_i) for the universal family, md5-pure in the seed index —
-    the DuckDB twins inline the same integer literals (a ∈ [1, P-1],
-    b ∈ [0, P-1])."""
-    import hashlib
-
-    def _c(tag: str, i: int) -> int:
-        return int(hashlib.md5(f"{tag}|{i}".encode()).hexdigest()[:15], 16)
-
-    a = [_c("mh_a", i) % (MINHASH_P - 1) + 1 for i in range(num_hashes)]
-    b = [_c("mh_b", i) % MINHASH_P for i in range(num_hashes)]
-    return a, b
+from character_identification_spark.functions.minhash import minhash_bands
 
 
 def sortkey_blocks(
@@ -139,59 +117,23 @@ def minhash_lsh_blocks(
     their minhash signatures agrees — probability 1-(1-j^r)^b for Jaccard j.
     Defaults (b=6, r=2) give ~0.96 hit rate at j=0.6, ~0.26 at j=0.3.
 
-    ZERO-SHUFFLE, ONE-md5 signatures (round-5 perf rework of the
-    two-groupBy per-seed-md5 formulation): each shingle hashes ONCE
-    (md5 60-bit → mod P), every seed's minhash is array_min over the
-    cheap (a_i·h + b_i) mod P rescoring of that base array — a pure
-    whole-stage-codegen projection, md5 count cut num_hashes× — and the
-    banded keys posexplode num_hashes/band_size rows per mention. The
-    only shuffle this family ever causes is downstream (dedup/cap),
-    where one was already due. Band-hit statistics are those of any
-    universal family; the DuckDB twins inline the same (a_i, b_i).
+    The signatures are functions/minhash.minhash_bands over the name's
+    distinct character n-grams (one md5 per shingle, a zero-shuffle
+    projection); the only shuffle this family ever causes is downstream
+    (cap), where one was already due. A NULL norm emits no key.
     """
-    shing = char_shingles("norm", n_gram)
-    base = F.transform(shing, lambda s: h_long(s) % MINHASH_P)
-    # hb materializes as a named column so the md5 array is computed
-    # once, not re-inlined into all num_hashes transforms (CollapseProject
-    # keeps multi-use non-trivial expressions un-collapsed)
-    a_co, b_co = minhash_coefficients(num_hashes)
-
-    def _ab(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    mins = [
-        F.array_min(F.transform(F.col("hb"), _ab(a_co[i], b_co[i])))
-        for i in range(num_hashes)
-    ]
-    n_bands = (num_hashes + band_size - 1) // band_size
-    band_sigs = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[m.cast("string") for m in mins[b * band_size : (b + 1) * band_size]],
-            )
-            for b in range(n_bands)
-        ]
-    )
-    extra = [F.col(c) for c in passthrough]
-    return (
-        mentions
-        # the exploded formulation dropped null-norm rows at the explode;
-        # the projection form must drop them explicitly
-        .filter(F.col("norm").isNotNull())
-        .select("mention_uid", base.alias("hb"), *extra)
-        .select(
-            "mention_uid",
-            F.posexplode(band_sigs).alias("band", "band_sig"),
-            *extra,
-        )
-        .select(
-            "mention_uid",
-            F.concat(F.lit("mh:"), F.col("band"), F.lit(":"), F.col("band_sig")).alias(
-                "block_key"
-            ),
-            *extra,
-        )
+    return minhash_bands(
+        mentions,
+        char_shingles("norm", n_gram),
+        ("mention_uid", *passthrough),
+        num_hashes,
+        band_size,
+    ).select(
+        "mention_uid",
+        F.concat(F.lit("mh:"), F.col("band"), F.lit(":"), F.col("band_sig")).alias(
+            "block_key"
+        ),
+        *passthrough,
     )
 
 

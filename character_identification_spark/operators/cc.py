@@ -91,10 +91,14 @@ def connected_components(
     absent (caller unions singletons; see attach_singletons).
 
     ``converge_check_every`` > 1 skips the convergence-check job on
-    intermediate rounds. Round-6 default: check EVERY round — the check
-    is one keyed agg over the localCheckpointed (memory-resident) edge
-    set, far cheaper than a star round, so skipping checks buys nothing
-    and costs extra full rounds after convergence.
+    intermediate rounds (the last round is always checked). The default
+    checks EVERY round: the check is one keyed agg over the
+    localCheckpointed (memory-resident) edge set, and skipping it can
+    cost extra full rounds after convergence. The driver's ER queries,
+    dedup_clusters and the streaming relabel use the default;
+    plans/pipeline.run_pipeline and perfbench's vocab_link pass
+    ``converge_check_every=2``. Which cadence is cheaper is unmeasured:
+    it depends on the round counts.
 
     Convergence is detected STRUCTURALLY, not by comparing consecutive
     edge sets: the loop's terminal states are exactly the "stars rooted

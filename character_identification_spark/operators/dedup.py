@@ -6,8 +6,9 @@ computable identically in DuckDB via the md5 primitives in
 functions/hashing.py:
 
   exact_dedup        md5-digest groupBy — byte-level duplicates
-  minhash_signatures banded MinHash over word/char shingles (near-dup)
-  minhash_dup_pairs  LSH candidate pairs + exact-Jaccard verification
+  minhash_dup_pairs  banded MinHash over word shingles (functions/
+                     minhash.py) → capped LSH candidate pairs +
+                     exact-Jaccard verification
   simhash            60-bit SimHash (bit votes over hashed tokens)
   simhash_dup_pairs  Hamming-distance candidates via band equality
   embedding_dup_pairs cosine near-dup over an embedding column
@@ -15,9 +16,9 @@ functions/hashing.py:
 They generalize the ER pipeline's blocking machinery (operators/blocking.py)
 from person-name mentions to whole documents — the reference's
 scene-blocking idea (reference: latest/system.py:46) applied to content
-dedup. At 10^12-doc scale the shingle explode is the dominant shuffle;
-signatures are O(num_hashes) per doc and band buckets are capped the same
-way mention blocks are (cap_block_sizes).
+dedup. MinHash signatures are a zero-shuffle projection, O(num_hashes)
+per doc; band buckets are capped the same way mention blocks are
+(cap_block_sizes).
 """
 
 from __future__ import annotations
@@ -26,7 +27,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.hashing import h_long
+from character_identification_spark.functions.minhash import minhash_bands
+from character_identification_spark.functions.partitioning import fan_out
 from character_identification_spark.functions.vectors import cosine_sim
+from character_identification_spark.operators.blocking import cap_block_sizes
 
 SIMHASH_BITS = 60  # fits a signed 64-bit long; 15 hex digits of md5
 
@@ -71,123 +75,37 @@ def word_shingles(col, n: int = 3):
     )
 
 
-def _minhash_min_arrays(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_gram: int,
-    num_hashes: int,
-    char_level: bool = False,
-) -> DataFrame:
-    """→ (doc_id, mhs: array<string>[num_hashes]) — per-seed minimum of
-    md5-hex over the doc's shingles, as a ZERO-SHUFFLE whole-stage-codegen
-    projection (round-6 perf rework, mirroring the round-5
-    minhash_lsh_blocks projection in operators/blocking.py): per seed,
-    array_min over substring(md5(seed|shingle), 1, 15) of the shingle
-    array — exactly the values the old explode→explode→groupBy(doc, seed)
-    formulation aggregated, without materializing |shingles|×num_hashes
-    rows through an exchange. NULL-text docs are dropped explicitly (the
-    exploded form dropped them at the explode)."""
-    from character_identification_spark.operators.blocking import char_shingles
-
-    sh_expr = (
-        char_shingles(text_col, n_gram) if char_level else word_shingles(text_col, n_gram)
-    )
-
-    def _seed_min(i: int):
-        # closure factory: a two-param lambda would receive the array
-        # INDEX as its second argument (see CLAUDE.md invariants)
-        return F.array_min(
-            F.transform(
-                F.col("_sh"),
-                lambda s: F.substring(
-                    F.md5(F.concat_ws("|", F.lit(i), s)), 1, 15
-                ),
-            )
-        )
-
-    from character_identification_spark.functions.partitioning import fan_out
-
-    mhs = F.array(*[_seed_min(i) for i in range(num_hashes)])
-    return (
-        # num_hashes md5s per shingle is the dominant per-row cost; a tiny
-        # input (one file split) would run it on one task — fan out first
-        fan_out(docs.filter(F.col(text_col).isNotNull()), id_col)
-        # _sh materializes as a named column so the shingle array is
-        # computed once, not re-inlined into all num_hashes transforms
-        .select(F.col(id_col), sh_expr.alias("_sh"))
-        .select(id_col, mhs.alias("mhs"))
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_gram: int = 3,
-    num_hashes: int = 16,
-    char_level: bool = False,
-) -> DataFrame:
-    """→ (doc_id, seed, mh): per-seed minimum of md5-hex over the doc's
-    shingles. Deterministic across runs/partitionings (pure hash of data);
-    the hex-prefix min trick is shared with operators/blocking.py.
-
-    Round-6: computed as a zero-shuffle projection (_minhash_min_arrays)
-    + posexplode — value-identical to the old explode→groupBy form (same
-    md5 strings, same lexicographic minima), no exchange."""
-    return _minhash_min_arrays(
-        docs, id_col, text_col, n_gram, num_hashes, char_level
-    ).select(F.col(id_col), F.posexplode("mhs").alias("seed", "mh"))
-
-
-def minhash_buckets(
-    signatures: DataFrame, id_col: str = "doc_id", band_size: int = 2
-) -> DataFrame:
-    # default r=2: for 16 hashes -> 8 bands; band-hit prob at Jaccard 0.7
-    # is 1-(1-0.49)^8 ~ 0.995 (r=4 would miss ~1/3 of J=0.7 pairs)
-    """Signatures → (doc_id, bucket): one bucket key per band, the LSH
-    grouping near-duplicates collide into."""
-    banded = signatures.withColumn("band", (F.col("seed") / band_size).cast("int"))
-    return banded.groupBy(id_col, "band").agg(
-        F.concat(
-            F.col("band").cast("string"),
-            F.lit(":"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "mh"))), lambda s: s["mh"]
-                ),
-                ",",
-            ),
-        ).alias("bucket")
-    )
-
-
-def _minhash_bucket_rows(
+def _doc_buckets(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     n_gram: int,
     num_hashes: int,
     band_size: int,
+    max_bucket_size: int | None,
 ) -> DataFrame:
-    """Fused signatures→buckets path for minhash_dup_pairs: the per-seed
-    minima come from the zero-shuffle projection (_minhash_min_arrays) and
-    each band's bucket string is a slice+array_join of that array —
-    byte-identical to minhash_buckets(minhash_signatures(...)) (same
-    band:mh,mh strings, seeds in order by construction) with ZERO
-    exchanges instead of two groupBy shuffles."""
-    n_bands = (num_hashes + band_size - 1) // band_size
-    buckets = F.array(
-        *[
-            F.concat(
-                F.lit(f"{b}:"),
-                F.array_join(F.slice("mhs", b * band_size + 1, band_size), ","),
-            )
-            for b in range(n_bands)
-        ]
+    """→ (doc_id, bucket): one '<band>:<sig>' LSH bucket per band of the
+    doc's word-shingle MinHash (functions/minhash.minhash_bands — a
+    zero-shuffle projection, one md5 per shingle), oversize buckets
+    salt-split by cap_block_sizes. NULL-text docs get no bucket."""
+    # the shingle md5s are the dominant per-row cost; a tiny input (one
+    # file split) would run them on one task — fan out first
+    bands = minhash_bands(
+        fan_out(docs, id_col),
+        word_shingles(text_col, n_gram),
+        [id_col],
+        num_hashes,
+        band_size,
     )
-    return _minhash_min_arrays(docs, id_col, text_col, n_gram, num_hashes).select(
-        F.col(id_col), F.explode(buckets).alias("bucket")
+    # cap_block_sizes speaks (mention_uid, block_key)
+    buckets = bands.select(
+        F.col(id_col).alias("mention_uid"),
+        F.concat(F.col("band"), F.lit(":"), F.col("band_sig")).alias("block_key"),
+    )
+    if max_bucket_size:
+        buckets = cap_block_sizes(buckets, max_bucket_size)
+    return buckets.select(
+        F.col("mention_uid").alias(id_col), F.col("block_key").alias("bucket")
     )
 
 
@@ -202,22 +120,14 @@ def minhash_dup_pairs(
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """LSH candidates + exact shingle-Jaccard verify →
-    (id1, id2, jaccard, is_dup). The verify join carries each doc's distinct
-    shingle array once (computed in the same pass as the signature scan)."""
-    buckets = _minhash_bucket_rows(
-        docs, id_col, text_col, n_gram, num_hashes, band_size
+    (id1, id2, jaccard, is_dup). Candidates are doc pairs sharing a
+    (capped) band bucket; the verify join carries each doc's distinct
+    shingle array once. The default r=2 over 16 hashes gives 8 bands:
+    band-hit probability at Jaccard 0.7 is 1-(1-0.49)^8 ≈ 0.995 (r=4
+    would miss ~1/3 of J=0.7 pairs)."""
+    buckets = _doc_buckets(
+        docs, id_col, text_col, n_gram, num_hashes, band_size, max_bucket_size
     )
-    if max_bucket_size:
-        from character_identification_spark.operators.blocking import cap_block_sizes
-
-        buckets = cap_block_sizes(
-            buckets.withColumnRenamed("bucket", "block_key").withColumnRenamed(
-                id_col, "mention_uid"
-            ),
-            max_bucket_size,
-        ).withColumnRenamed("block_key", "bucket").withColumnRenamed(
-            "mention_uid", id_col
-        )
     a = buckets.select(F.col("bucket"), F.col(id_col).alias("id1"))
     b = buckets.select(F.col("bucket"), F.col(id_col).alias("id2"))
     cand = (
@@ -226,8 +136,6 @@ def minhash_dup_pairs(
         .select("id1", "id2")
         .distinct()
     )
-    from character_identification_spark.functions.partitioning import fan_out
-
     sh = fan_out(docs, id_col).select(
         F.col(id_col), word_shingles(text_col, n_gram).alias("shingles")
     )
@@ -341,8 +249,6 @@ def simhash(
     # the relational twin does so implicitly, the contract must match
     id_type = docs.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, simhash long"
-    from character_identification_spark.functions.partitioning import fan_out
-
     # tokenize+md5+vote is per-row heavy: spread a tiny input (one file
     # split) across the cluster before the batch UDF
     return fan_out(docs.select(id_col, text_col), id_col).mapInPandas(fn, schema)

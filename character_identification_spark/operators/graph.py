@@ -13,6 +13,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """(a, b): the undirected view of an edge set — self-loops dropped,
+    each edge canonicalized to (least, greatest), duplicates removed."""
+    return (
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+        .filter(F.col("s") != F.col("d"))
+        .select(F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b"))
+        .distinct()
+    )
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """(node, nbr) in both directions of the undirected (a, b) edges,
+    localCheckpointed: the per-round operators join it every round."""
+    return (
+        und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
+        .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+        .localCheckpoint()
+    )
+
+
 def pagerank(
     edges: DataFrame,
     n_iters: int = 3,
@@ -116,15 +137,7 @@ def triangle_counts(
     total, so every triangle still materializes exactly once; the
     DuckDB twin replays the identical (deg, id) row-value comparisons.
     """
-    raw = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    und = (
-        raw.filter(F.col("s") != F.col("d"))
-        .select(
-            F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, src_col, dst_col).localCheckpoint()
     o = oriented_edges(und).localCheckpoint()
     wedge = (
         o.select(
@@ -190,17 +203,7 @@ def bfs_distances(
     lineage exactly as cc.py's loop does. Degree skew is bounded for
     kNN graphs (deg ≤ 2k); power-law graphs salt the frontier join.
     """
-    raw = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    und = (
-        raw.filter(F.col("s") != F.col("d"))
-        .select(F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b"))
-        .distinct()
-    )
-    adj = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint()
-    )
+    adj = _adjacency(_undirected(edges, src_col, dst_col))
     settled = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
@@ -246,15 +249,7 @@ def label_propagation(
     skew is bounded for kNN graphs (deg ≤ 2k); for power-law graphs the
     count stage is the standard salt-and-resum target.
     """
-    raw = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    und = (
-        raw.filter(F.col("s") != F.col("d"))
-        .select(F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b"))
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).localCheckpoint()
+    adj = _adjacency(_undirected(edges, src_col, dst_col))
     labels = adj.select("node").distinct().withColumn("community", F.col("node"))
     for _ in range(n_iters):
         votes = (

@@ -19,6 +19,7 @@ engines disagree on formatting.
 from __future__ import annotations
 
 from character_identification_spark.functions.hashing import dd_h_long
+from character_identification_spark.functions.minhash import dd_minhash_bands
 
 # --------------------------------------------------------------------------
 # ER fragments (mentions derived from part.p_name — see driver_contract)
@@ -64,53 +65,18 @@ sk_fam AS (
 )
 """
 
-def _er_minhash_sql(num_hashes: int = 8, band_size: int = 2) -> str:
-    """Twin of blocking.minhash_lsh_blocks (round-5 universal-hash
-    form): ONE md5 per shingle → base mod P, per-seed minhash =
-    list_min over the (a_i·h + b_i) mod P rescoring with the SAME
-    md5-pure coefficients the engine inlines."""
-    from character_identification_spark.operators.blocking import (
-        MINHASH_P,
-        minhash_coefficients,
-    )
-
-    a_co, b_co = minhash_coefficients(num_hashes)
-    mins = [
-        f"list_min(list_transform(hb, h -> ({a_co[i]} * h + {b_co[i]}) % {MINHASH_P}))"
-        for i in range(num_hashes)
-    ]
-    n_bands = (num_hashes + band_size - 1) // band_size
-
-    def _sig(b: int) -> str:
-        return " || ',' || ".join(
-            f"CAST({mins[i]} AS VARCHAR)"
-            for i in range(b * band_size, min((b + 1) * band_size, num_hashes))
-        )
-
-    selects = "\n    UNION ALL\n".join(
-        f"    SELECT mention_uid, {b} AS band, {_sig(b)} AS band_sig FROM mh_base"
-        for b in range(n_bands)
-    )
-    return f"""
-mh_base AS (
-  SELECT mention_uid,
-         list_transform(list_distinct(list_transform(
+# blocking.char_shingles("norm", 3)
+_CHAR3_NORM = """list_distinct(list_transform(
            generate_series(1, greatest(len(norm) - 2, 1)),
-           i -> substr(norm, i, 3))),
-           s -> {dd_h_long('s')} % {MINHASH_P}) AS hb
-  FROM m WHERE norm IS NOT NULL
-),
+           i -> substr(norm, i, 3)))"""
+
+# twin of blocking.minhash_lsh_blocks(n_gram=3, num_hashes=8, band_size=2)
+_ER_MINHASH = f"""
 mh_fam AS (
-  SELECT mention_uid,
-         'mh:' || CAST(band AS VARCHAR) || ':' || band_sig AS block_key
-  FROM (
-{selects}
-  )
+  SELECT mention_uid, 'mh:' || CAST(band AS VARCHAR) || ':' || band_sig AS block_key
+  FROM ({dd_minhash_bands("m", _CHAR3_NORM, ["mention_uid"], 8, 2)})
 )
 """
-
-
-_ER_MINHASH = _er_minhash_sql(8, 2)
 
 
 def _capped(src: str, out: str, cap: int = 40) -> str:
@@ -431,8 +397,14 @@ FROM d JOIN g USING (digest)
 """
 )
 
-# word 3-gram shingles + 16-seed MinHash, r=2 bands, exact-Jaccard verify
-_DEDUP_MINHASH_VERIFIED = r"""
+
+def _dedup_minhash_verified(cap: int) -> str:
+    """Twin of dedup.minhash_dup_pairs(n_gram=3, num_hashes=16,
+    band_size=2, max_bucket_size=cap): word 3-gram shingles, banded
+    MinHash buckets salt-split by the cap, exact-Jaccard verify. The
+    buckets take cap_block_sizes' (mention_uid, block_key) names, as the
+    engine's do."""
+    return rf"""
 sh AS (
   SELECT doc_id,
          list_distinct(list_transform(
@@ -440,21 +412,15 @@ sh AS (
            i -> array_to_string(list_slice(toks, i, i + 2), ' '))) AS shingles
   FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM docs)
 ),
-sig AS (
-  SELECT doc_id, seed,
-         min(substr(md5(CAST(seed AS VARCHAR) || '|' || shingle), 1, 15)) AS mh
-  FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh)
-  CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS seed)
-  GROUP BY doc_id, seed
+bands AS (
+  SELECT doc_id AS mention_uid, CAST(band AS VARCHAR) || ':' || band_sig AS block_key
+  FROM ({dd_minhash_bands("sh", "shingles", ["doc_id"], 16, 2)})
 ),
-buckets AS (
-  SELECT doc_id,
-         CAST(seed // 2 AS VARCHAR) || ':' || string_agg(mh, ',' ORDER BY seed) AS bucket
-  FROM sig GROUP BY doc_id, seed // 2
-),
+{_capped("bands", "buckets", cap)},
 cand AS (
-  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-  FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
+  SELECT DISTINCT a.mention_uid AS id1, b.mention_uid AS id2
+  FROM buckets a JOIN buckets b
+    ON a.block_key = b.block_key AND a.mention_uid < b.mention_uid
 ),
 verified AS (
   SELECT id1, id2,
@@ -464,6 +430,10 @@ verified AS (
   FROM cand JOIN sh s1 ON cand.id1 = s1.doc_id JOIN sh s2 ON cand.id2 = s2.doc_id
 )
 """
+
+
+# every Spark caller passes max_bucket_size=1000
+_DEDUP_MINHASH_VERIFIED = _dedup_minhash_verified(1000)
 
 SQL_DEDUP_MINHASH_PAIRS = (
     "WITH "

@@ -5,13 +5,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from character_identification_spark.functions.minhash import minhash_bands
 from character_identification_spark.operators.dedup import (
     dedup_clusters,
     embedding_dup_pairs,
     exact_dedup,
-    minhash_buckets,
     minhash_dup_pairs,
-    minhash_signatures,
     simhash,
     simhash_dup_pairs,
     word_shingles,
@@ -61,9 +60,13 @@ def test_minhash_dup_pairs(spark, docs):
 
 
 def test_minhash_signatures_deterministic(spark, docs):
-    a = sorted(map(tuple, minhash_signatures(docs).collect()))
-    b = sorted(map(tuple, minhash_signatures(docs.repartition(7)).collect()))
-    assert a == b
+    def sigs(d):
+        bands = minhash_bands(d, word_shingles("text", 3), ["doc_id"], 16, 2)
+        return sorted(map(tuple, bands.collect()))
+
+    a = sigs(docs)
+    assert len(a) == 4 * 8  # 8 bands of 2 per doc
+    assert a == sigs(docs.repartition(7))
 
 
 def test_simhash_properties(spark, docs):
@@ -278,25 +281,51 @@ def test_prefix_jaccard_equals_brute_force(spark):
         assert got == brute, (tau, got, brute)
 
 
-def test_minhash_fused_buckets_equal_groupby_form(spark, docs):
-    """Round-6 zero-shuffle projection path: bucket rows must be
-    byte-identical to the readable groupBy spec form."""
-    from character_identification_spark.operators.dedup import (
-        _minhash_bucket_rows,
-    )
+def test_minhash_dup_pairs_buckets_stable_under_repartition(spark, docs):
+    """The capped bucket rows feeding minhash_dup_pairs are a pure
+    function of the data: physical partitioning changes nothing, also
+    when a cap of 1 salt-splits every shared bucket."""
+    from character_identification_spark.operators.dedup import _doc_buckets
 
-    spec = sorted(
+    def rows(d, cap):
+        out = _doc_buckets(d, "doc_id", "text", 3, 16, 2, cap)
+        return sorted(map(tuple, out.collect()))
+
+    for cap in (1000, 1):
+        a = rows(docs, cap)
+        assert len(a) == 4 * 8  # 8 bands per doc
+        assert any("#" in bucket for _, bucket in a) == (cap == 1)
+        assert a == rows(docs.repartition(7), cap), cap
+
+
+@pytest.mark.parametrize("cap", [2, 1000])
+def test_minhash_dup_pairs_matches_capped_duckdb_twin(spark, docs, cap):
+    """The oracle twin mirrors the bucket cap: at cap=2 the three-doc
+    buckets salt-split, and Spark and DuckDB still agree row for row."""
+    import duckdb
+
+    from character_identification_spark.oracles import _dedup_minhash_verified
+
+    got = sorted(
         map(
             tuple,
-            minhash_buckets(minhash_signatures(docs))
-            .select("doc_id", "bucket")
+            minhash_dup_pairs(docs, max_bucket_size=cap)
+            .select("id1", "id2", "jaccard")
             .collect(),
         )
     )
-    fused = sorted(
-        map(
-            tuple,
-            _minhash_bucket_rows(docs, "doc_id", "text", 3, 16, 2).collect(),
-        )
+    con = duckdb.connect()
+    con.register("fixture", docs.toPandas())
+    exp = sorted(
+        con.sql(
+            "WITH docs AS (SELECT doc_id, text FROM fixture),"
+            + _dedup_minhash_verified(cap)
+            + "SELECT id1, id2, jaccard FROM verified"
+        ).fetchall()
     )
-    assert spec == fused
+    assert got == exp and got
+    if cap == 2:
+        from character_identification_spark.operators.dedup import _doc_buckets
+
+        buckets = _doc_buckets(docs, "doc_id", "text", 3, 16, 2, cap).collect()
+        assert any("#" in r["bucket"] for r in buckets)

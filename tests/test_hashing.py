@@ -11,7 +11,10 @@ from character_identification_spark.functions.hashing import (
     dd_h_long,
     h_hex,
     h_long,
-    seeded_hex,
+)
+from character_identification_spark.functions.minhash import (
+    MINHASH_P,
+    minhash_coefficients,
 )
 
 WORDS = ["ross geller", "r. geller", "", "ümlaut", "a|b#c", "12345"]
@@ -36,12 +39,13 @@ def test_h_long_matches_duckdb_and_is_nonnegative(spark):
         assert got[w] >= 0
 
 
-def test_seeded_families_differ(spark):
-    df = spark.createDataFrame([("abc",)], "w string")
-    row = df.select(
-        seeded_hex(0, "w").alias("a"), seeded_hex(1, "w").alias("b")
-    ).collect()[0]
-    assert row["a"] != row["b"]
+def test_minhash_coefficients_distinct_and_in_range():
+    # 16 distinct members of the universal family (a·h + b) mod P
+    a, b = minhash_coefficients(16)
+    assert len(set(zip(a, b))) == 16
+    assert all(1 <= x <= MINHASH_P - 1 for x in a)
+    assert all(0 <= x <= MINHASH_P - 1 for x in b)
+    assert minhash_coefficients(4) == (a[:4], b[:4])  # prefix-stable
 
 
 def test_hex_orders_as_numeric(spark):

@@ -402,16 +402,17 @@ def test_knn_graph_salted_join_no_corpus_broadcast(spark):
 
 @needs_data
 def test_minhash_signatures_zero_shuffle(spark):
-    """Round-6 claim, machine-checked: DOCUMENT MinHash signatures (and
-    the fused bucket rows feeding minhash_dup_pairs) are pure
-    projections — no Exchange; the old form shuffled docs × shingles ×
-    seeds through two groupBys. The fan-out repartition is the ONLY
-    exchange allowed in the bucket path, and only when the input has
-    fewer partitions than the session default (here we pre-partition to
-    defaultParallelism so the plan must contain none)."""
+    """DOCUMENT MinHash signatures (functions/minhash.minhash_bands over
+    word shingles) and the uncapped bucket rows feeding
+    minhash_dup_pairs are pure projections — no Exchange. The fan-out
+    repartition is the ONLY exchange allowed in the bucket path, and
+    only when the input has fewer partitions than the session default
+    (here we pre-partition to defaultParallelism so the plan must
+    contain none); the cap's window adds the bucket-keyed one."""
+    from character_identification_spark.functions.minhash import minhash_bands
     from character_identification_spark.operators.dedup import (
-        _minhash_bucket_rows,
-        minhash_signatures,
+        _doc_buckets,
+        word_shingles,
     )
 
     docs = (
@@ -420,9 +421,10 @@ def test_minhash_signatures_zero_shuffle(spark):
         .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
         .localCheckpoint(eager=True)  # pin partitioning; isolate the op
     )
-    assert "Exchange" not in plan_of(minhash_signatures(docs)), "sigs shuffle"
+    sigs = minhash_bands(docs, word_shingles("text", 3), ["doc_id"], 16, 2)
+    assert "Exchange" not in plan_of(sigs), "sigs shuffle"
     assert "Exchange" not in plan_of(
-        _minhash_bucket_rows(docs, "doc_id", "text", 3, 16, 2)
+        _doc_buckets(docs, "doc_id", "text", 3, 16, 2, None)
     ), "bucket rows shuffle"
 
 

@@ -59,7 +59,7 @@ def main() -> None:
     modes = args or list(P3_MODES)
     path = f"/root/reference/json/character-identification-{split}.json"
     spark = get_spark(
-        app_name="measure_rules", cores=8,
+        app_name="measure_rules",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -224,7 +224,7 @@ def main() -> None:
     epochs = int(sys.argv[sys.argv.index("--epochs") + 1]) if "--epochs" in sys.argv else 3000
     path = f"/root/reference/json/character-identification-{split}.json"
     spark = get_spark(
-        app_name="train_coref", cores=8,
+        app_name="train_coref",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -160,7 +160,7 @@ def main() -> None:
     write = "--write" in sys.argv
     epochs = int(sys.argv[sys.argv.index("--epochs") + 1]) if "--epochs" in sys.argv else 4000
     spark = get_spark(
-        app_name="train_linking", cores=8,
+        app_name="train_linking",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
