@@ -25,7 +25,7 @@ def one_query(name: str, repeats: int = 1) -> None:
     warm(spark)
     for r in range(repeats):
         # build + force inside the window, like bench.py: an eager
-        # localCheckpoint inside the query builder is part of its cost
+        # materialization inside the query builder is part of its cost
         t0 = time.monotonic()
         _force(QUERIES[name](spark, SF_DIR))
         print(f"  {name} run{r} {time.monotonic() - t0:7.2f} s", flush=True)

@@ -83,6 +83,7 @@ from character_identification_spark.operators.textstats import (
     text_stats,
     token_count,
 )
+from character_identification_spark.session import materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -255,7 +256,7 @@ def q_er_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts); materialize the |mentions|-sized slice once instead of
     # re-running the attach join + CC-output aggregate per branch
     # (measured 1.0 → 0.3 s warm, and one fewer codegen subtree cold)
-    clustered = clustered.localCheckpoint(eager=True)
+    clustered = materialize(clustered)
     ents = canonical_entities(clustered)
     # the driver's pandas canonicalizer can't factorize array columns —
     # join the alias set to a '|'-separated string (format-stable in both
@@ -860,7 +861,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (graph.pagerank, 3 fixed synchronous rounds, d=0.85)
     over the approximate kNN graph's edges — the Pregel dataflow
     relationally: one dst-keyed map-side-combined shuffle per round,
-    node-sized rank table, localCheckpoint between rounds. Fixed
+    node-sized rank table, session.materialize between rounds. Fixed
     iteration count keeps the result a pure function of the edge set,
     replayed by the oracle's unrolled-CTE twin."""
     from character_identification_spark.operators.graph import pagerank

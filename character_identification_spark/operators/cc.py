@@ -13,11 +13,11 @@ replay fidelity test, reference latest/tools/test.py:4-36, asserts this
 closure reproduces gold clusters) — which is precisely what connected
 components computes, minus the order-dependence.
 
-Scale notes: each round is one groupBy + one join on longs; localCheckpoint
-truncates lineage so plans don't grow with rounds; high-degree nodes are
-handled by large-star's design (neighbors > u re-attach to the min, so hot
-components star-collapse instead of chaining); AQE re-sizes each round's
-shuffle.
+Scale notes: each round is one groupBy + one join on longs;
+session.materialize cuts the lineage after every round so plans don't
+grow with rounds; high-degree nodes are handled by large-star's design
+(neighbors > u re-attach to the min, so hot components star-collapse
+instead of chaining); AQE re-sizes each round's shuffle.
 """
 
 from __future__ import annotations
@@ -25,26 +25,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _orient(edges: DataFrame) -> DataFrame:
-    """Canonical oriented-distinct edge set: u > v, no self-loops, one row
-    per undirected edge — the loop invariant both star rounds rely on."""
-    return (
-        edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+from character_identification_spark.operators.graph import undirected
+from character_identification_spark.session import materialize
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each u: every neighbor v > u links to min(N(u) ∪ {u}).
 
-    Input contract (round-6 perf rework): ``edges`` is oriented-distinct
-    (u > v, no self-loops, no duplicate rows) — guaranteed by _orient at
-    loop entry and preserved by both stars. The symmetric view is then a
-    plain union (the two halves can't overlap: u > v vs u < v), saving the
-    old _symmetrize distinct — one Exchange + dedup aggregate per round.
-    Output is again oriented-distinct: each emitted row is (v, mn) with
+    Input contract: ``edges`` is oriented-distinct (u > v, no self-loops,
+    no duplicate rows) — connected_components' loop entry (the undirected
+    view, greatest endpoint first) guarantees it and both stars preserve
+    it. The symmetric view is then a plain union (the two halves can't
+    overlap: u > v vs u < v), with no distinct. Output is again
+    oriented-distinct: each emitted row is (v, mn) with
     mn = min(N(u) ∪ {u}) ≤ u < v."""
     sym = edges.select("u", "v").union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -63,10 +56,10 @@ def _small_star(edges: DataFrame) -> DataFrame:
     """Every v in N⁻(u) ∪ {u} links to its min.
 
     Input contract: oriented-distinct (u > v) — _large_star's output
-    already satisfies it, so the old greatest/least re-orientation and its
-    distinct (one Exchange + dedup per round) are gone. Output rows are
-    (v, mn) and (u, mn) with mn = min over the group's v's, so mn < u and
-    mn ≤ v with equality filtered — oriented-distinct again."""
+    already satisfies it, so no re-orientation or distinct runs here.
+    Output rows are (v, mn) and (u, mn) with mn = min over the group's
+    v's, so mn < u and mn ≤ v with equality filtered — oriented-distinct
+    again."""
     mins = edges.groupBy("u").agg(F.min("v").alias("mn"))
     relink = (
         edges.join(mins, "u")
@@ -90,32 +83,28 @@ def connected_components(
     ordering and equality are used). Nodes that appear in no edge are
     absent (caller unions singletons; see attach_singletons).
 
-    ``converge_check_every`` > 1 skips the convergence-check job on
-    intermediate rounds (the last round is always checked). The default
-    checks EVERY round: the check is one keyed agg over the
-    localCheckpointed (memory-resident) edge set, and skipping it can
-    cost extra full rounds after convergence. The driver's ER queries,
-    dedup_clusters and the streaming relabel use the default;
-    plans/pipeline.run_pipeline and perfbench's vocab_link pass
-    ``converge_check_every=2``. Which cadence is cheaper is unmeasured:
-    it depends on the round counts.
+    ``converge_check_every`` > 1 skips the convergence-check job (one
+    keyed agg over the materialized edge set) on intermediate rounds; the
+    last round is always checked. Skipping can cost extra full rounds
+    after convergence. plans/pipeline.run_pipeline and perfbench's
+    vocab_link pass 2; every other caller checks every round. Which
+    cadence is cheaper depends on the round counts, which are unmeasured.
 
-    Convergence is detected STRUCTURALLY, not by comparing consecutive
-    edge sets: the loop's terminal states are exactly the "stars rooted
-    at the component minimum" sets, recognizable the round one first
-    appears by (1) every source u occurring exactly ONCE and (2) no
-    target v also occurring as a source. (1)∧(2) means the edge set is a
-    height-1 forest u→root with root < every member (the loop's u > v
-    orientation invariant), i.e. root = component min — and such a set
-    is a fixpoint of both stars, so breaking on it yields the same
-    assignments as running to signature equality while saving the one
-    extra large+small round that a compare-to-previous check needs to
-    observe the set repeat. Both conditions are required: a set where a
-    node keeps TWO parents (u duplicated) can satisfy (2) alone while
-    its parents still await merging."""
-    cur = _orient(edges).localCheckpoint(eager=True)
+    Convergence is detected STRUCTURALLY: the loop's terminal states are
+    the stars rooted at the component minimum, recognizable the round one
+    first appears by (1) every source u occurring exactly ONCE and (2) no
+    target v also occurring as a source. (1)∧(2) make the edge set a
+    height-1 forest u→root with root < every member (the u > v
+    invariant), i.e. root = component min, a fixpoint of both stars. Both
+    are required: a node with TWO parents (u duplicated) can satisfy (2)
+    while its parents still await merging. When ``max_iter`` rounds end
+    without that forest the edge set holds partial merges, not
+    components, so the call raises RuntimeError."""
+    cur = materialize(
+        undirected(edges, "u", "v").select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
     for i in range(max_iter):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        cur = materialize(_small_star(_large_star(cur)))
         if (i + 1) % converge_check_every and i + 1 < max_iter:
             continue
         ends = cur.select(
@@ -136,6 +125,10 @@ def connected_components(
         )
         if violations.isEmpty():
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} rounds"
+        )
     # converged: every edge is (node, root) with root = component min
     assign = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = cur.select(F.col("v").alias("node")).distinct().withColumn(

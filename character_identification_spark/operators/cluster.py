@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.partitioning import topk_per_group
+from character_identification_spark.session import materialize
 
 MICROS = 1_000_000.0
 
@@ -269,16 +270,13 @@ def _pq_train(base: DataFrame, n_blocks: int, k: int, n_iters: int):
     ]
 
     for _ in range(n_iters):
-        # localCheckpoint cuts projection collapse: without it Catalyst
+        # materialize cuts projection collapse: without it Catalyst
         # inlines all n_blocks argmin mega-expressions into the exploded
         # update agg and codegen time dominates (measured 25 s/iter on
-        # 500 rows; 2 s with the barrier). Same per-round state
-        # materialization discipline as operators/cc.py.
+        # 500 rows; 2 s with the barrier)
         code_arr = F.array(*[F.col(f"c{b}") for b in range(n_blocks)])
-        a = (
-            _pq_assigned(base, centroids, d_b)
-            .select(code_arr.alias("codes"), "_v")
-            .localCheckpoint()
+        a = materialize(
+            _pq_assigned(base, centroids, d_b).select(code_arr.alias("codes"), "_v")
         )
         new_rows = (
             a.select("codes", F.posexplode(F.col("_v")).alias("slot", "val"))

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.partitioning import topk_per_group
+from character_identification_spark.session import materialize
 
 
 def ambiguous_col(norm_col: Column | str = "norm") -> Column:
@@ -176,7 +177,6 @@ def resolve_in_context(
     name_clusters: DataFrame,
     amb_links: DataFrame,
     max_anchors_per_ctx: int = 10000,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """mentions(mention_uid, url, norm, …) × name tables → assignments
     (mentions + cluster_id).
@@ -187,18 +187,16 @@ def resolve_in_context(
     name's fallback cluster. One join keyed on (ctx, name) each side.
     """
     m = mentions.withColumn("ctx", url_context("url"))
-    named = m.join(
-        name_clusters.select(
-            F.col("norm"), F.col("mention_uid").alias("name_uid"),
-            "cluster_id", "needs_ctx",
-        ),
-        "norm",
-    ).persist()  # scanned twice (easy/hard split) — one broadcast join, not two
-    # the cache is needed until the returned union is materialized; callers
-    # that run many pipelines in one session pass cache_registry and
-    # unpersist after their first action (plans/pipeline.py does)
-    if cache_registry is not None:
-        cache_registry.append(named)
+    # scanned twice (easy/hard split) — one broadcast join, not two
+    named = materialize(
+        m.join(
+            name_clusters.select(
+                F.col("norm"), F.col("mention_uid").alias("name_uid"),
+                "cluster_id", "needs_ctx",
+            ),
+            "norm",
+        )
+    )
     easy = named.filter(~F.col("needs_ctx")).drop("name_uid", "needs_ctx", "ctx")
 
     hard = named.filter(F.col("needs_ctx"))

@@ -31,6 +31,7 @@ from character_identification_spark.functions.minhash import minhash_bands
 from character_identification_spark.functions.partitioning import fan_out
 from character_identification_spark.functions.vectors import cosine_sim
 from character_identification_spark.operators.blocking import cap_block_sizes
+from character_identification_spark.session import materialize
 
 SIMHASH_BITS = 60  # fits a signed 64-bit long; 15 hex digits of md5
 
@@ -75,28 +76,27 @@ def word_shingles(col, n: int = 3):
     )
 
 
+def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n_gram: int) -> DataFrame:
+    """→ (doc_id, shingles): each doc's distinct word n-grams."""
+    # the shingle md5s downstream are the dominant per-row cost; a tiny
+    # input (one file split) would run them on one task — fan out first
+    return fan_out(docs, id_col).select(
+        F.col(id_col), word_shingles(text_col, n_gram).alias("shingles")
+    )
+
+
 def _doc_buckets(
-    docs: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    n_gram: int,
     num_hashes: int,
     band_size: int,
     max_bucket_size: int | None,
 ) -> DataFrame:
-    """→ (doc_id, bucket): one '<band>:<sig>' LSH bucket per band of the
-    doc's word-shingle MinHash (functions/minhash.minhash_bands — a
-    zero-shuffle projection, one md5 per shingle), oversize buckets
+    """(doc_id, shingles) → (doc_id, bucket): one '<band>:<sig>' LSH
+    bucket per band of the doc's MinHash (functions/minhash.minhash_bands
+    — a zero-shuffle projection, one md5 per shingle), oversize buckets
     salt-split by cap_block_sizes. NULL-text docs get no bucket."""
-    # the shingle md5s are the dominant per-row cost; a tiny input (one
-    # file split) would run them on one task — fan out first
-    bands = minhash_bands(
-        fan_out(docs, id_col),
-        word_shingles(text_col, n_gram),
-        [id_col],
-        num_hashes,
-        band_size,
-    )
+    bands = minhash_bands(sh, F.col("shingles"), [id_col], num_hashes, band_size)
     # cap_block_sizes speaks (mention_uid, block_key)
     buckets = bands.select(
         F.col(id_col).alias("mention_uid"),
@@ -125,9 +125,9 @@ def minhash_dup_pairs(
     shingle array once. The default r=2 over 16 hashes gives 8 bands:
     band-hit probability at Jaccard 0.7 is 1-(1-0.49)^8 ≈ 0.995 (r=4
     would miss ~1/3 of J=0.7 pairs)."""
-    buckets = _doc_buckets(
-        docs, id_col, text_col, n_gram, num_hashes, band_size, max_bucket_size
-    )
+    # the bands and both verify sides read the shingles: compute them once
+    sh = materialize(_doc_shingles(docs, id_col, text_col, n_gram))
+    buckets = _doc_buckets(sh, id_col, num_hashes, band_size, max_bucket_size)
     a = buckets.select(F.col("bucket"), F.col(id_col).alias("id1"))
     b = buckets.select(F.col("bucket"), F.col(id_col).alias("id2"))
     cand = (
@@ -135,9 +135,6 @@ def minhash_dup_pairs(
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
         .distinct()
-    )
-    sh = fan_out(docs, id_col).select(
-        F.col(id_col), word_shingles(text_col, n_gram).alias("shingles")
     )
     verified = (
         cand.join(sh.select(F.col(id_col).alias("id1"), F.col("shingles").alias("sh1")), "id1")

@@ -1,10 +1,11 @@
 """Graph analytics over edge DataFrames (src, dst).
 
 Connected components live in operators/cc.py (the ER transitive-closure
-core); this module holds the rank/centrality side. Same iteration
-discipline as CC: a driver loop of DataFrame joins with localCheckpoint
-between rounds (lineage stays O(1) per round), every shuffle keyed on
-the node id — the Pregel dataflow expressed relationally, no RDDs.
+core, which enters its loop through ``undirected`` below); this module
+holds the rank/centrality side. Same iteration discipline as CC: a driver
+loop of DataFrame joins with session.materialize between rounds (lineage
+stays O(1) per round), every shuffle keyed on the node id — the Pregel
+dataflow expressed relationally, no RDDs.
 """
 
 from __future__ import annotations
@@ -12,8 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from character_identification_spark.session import materialize
 
-def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+
+def undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """(a, b): the undirected view of an edge set — self-loops dropped,
     each edge canonicalized to (least, greatest), duplicates removed."""
     return (
@@ -26,11 +29,10 @@ def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 
 def _adjacency(und: DataFrame) -> DataFrame:
     """(node, nbr) in both directions of the undirected (a, b) edges,
-    localCheckpointed: the per-round operators join it every round."""
-    return (
+    materialized: the per-round operators join it every round."""
+    return materialize(
         und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint()
     )
 
 
@@ -58,15 +60,14 @@ def pagerank(
     O(|E|) per round through a single keyed exchange.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     n_nodes = nodes.count()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(deg, "src").localCheckpoint()
+    ed = materialize(e.join(deg, "src"))
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     base = (1.0 - damping) / n_nodes
@@ -77,7 +78,7 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("in_mass"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
             .select(
                 "node",
@@ -86,7 +87,6 @@ def pagerank(
                     + damping * F.coalesce(F.col("in_mass"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
@@ -137,8 +137,8 @@ def triangle_counts(
     total, so every triangle still materializes exactly once; the
     DuckDB twin replays the identical (deg, id) row-value comparisons.
     """
-    und = _undirected(edges, src_col, dst_col).localCheckpoint()
-    o = oriented_edges(und).localCheckpoint()
+    und = materialize(undirected(edges, src_col, dst_col))
+    o = materialize(oriented_edges(und))
     wedge = (
         o.select(
             F.col("lo").alias("u"),
@@ -199,16 +199,15 @@ def bfs_distances(
 
     Scale shape: per round, one node-keyed join (frontier × adjacency)
     + one anti-join against settled — both keyed on node ids; frontier
-    volume is bounded by the reachable set, and localCheckpoint caps
+    volume is bounded by the reachable set, and materialize caps
     lineage exactly as cc.py's loop does. Degree skew is bounded for
     kNN graphs (deg ≤ 2k); power-law graphs salt the frontier join.
     """
-    adj = _adjacency(_undirected(edges, src_col, dst_col))
-    settled = (
+    adj = _adjacency(undirected(edges, src_col, dst_col))
+    settled = materialize(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
     frontier = settled.select("node")
     for r in range(1, n_rounds + 1):
@@ -220,7 +219,7 @@ def bfs_distances(
         fresh = reached.join(settled.select("node"), "node", "left_anti").withColumn(
             "dist", F.lit(r)
         )
-        settled = settled.unionByName(fresh).localCheckpoint()
+        settled = materialize(settled.unionByName(fresh))
         frontier = settled.filter(F.col("dist") == r).select("node")
     return settled
 
@@ -249,7 +248,7 @@ def label_propagation(
     skew is bounded for kNN graphs (deg ≤ 2k); for power-law graphs the
     count stage is the standard salt-and-resum target.
     """
-    adj = _adjacency(_undirected(edges, src_col, dst_col))
+    adj = _adjacency(undirected(edges, src_col, dst_col))
     labels = adj.select("node").distinct().withColumn("community", F.col("node"))
     for _ in range(n_iters):
         votes = (
@@ -267,12 +266,10 @@ def label_propagation(
                 F.struct((-F.col("n")).alias("neg_n"), F.col("lbl").alias("lbl"))
             )["lbl"].alias("new_lbl")
         )
-        labels = (
-            labels.join(best, "node", "left")
-            .select(
+        labels = materialize(
+            labels.join(best, "node", "left").select(
                 "node",
                 F.coalesce("new_lbl", "community").alias("community"),
             )
-            .localCheckpoint()
         )
     return labels

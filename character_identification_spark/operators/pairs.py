@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from character_identification_spark.session import materialize
+
 
 def generate_pairs(
     mentions: DataFrame,
@@ -80,12 +82,10 @@ def match_edges_sparse(
     and the scorer's pandas UDF sees vocabulary pairs only. Output may
     repeat an edge across blocks — connected_components dedups on entry.
 
-    The two multiply-consumed intermediates are localCheckpointed (the
-    windowed assignment feeds stars + both rep-join sides; rp feeds the
-    scorer and the edge join) — like connected_components, the call runs
-    eagerly. Measured: whole edges+CC segment 14.9 → 9.0 s cold / 9.4 →
-    8.9 s warm at sf0.1 (the cold delta is the duplicated subtrees'
-    codegen).
+    The two multiply-consumed intermediates go through session.
+    materialize (the windowed assignment feeds stars + both rep-join
+    sides; rp feeds the scorer and the edge join) — like
+    connected_components, the call runs eagerly.
     """
     from character_identification_spark.operators.scoring import _score_strings
 
@@ -94,10 +94,12 @@ def match_edges_sparse(
         if "norm" in assign.columns
         else assign.join(mentions.select("mention_uid", "norm"), "mention_uid")
     )
-    a = normed.filter(F.col("norm").isNotNull()).withColumn(
-        "rep",
-        F.min("mention_uid").over(Window.partitionBy("block_key", "norm")),
-    ).localCheckpoint(eager=True)
+    a = materialize(
+        normed.filter(F.col("norm").isNotNull()).withColumn(
+            "rep",
+            F.min("mention_uid").over(Window.partitionBy("block_key", "norm")),
+        )
+    )
     stars = a.filter(F.col("mention_uid") != F.col("rep")).select(
         F.col("mention_uid").alias("u"), F.col("rep").alias("v")
     )
@@ -108,12 +110,11 @@ def match_edges_sparse(
     r2 = reps.select(
         "block_key", F.col("norm").alias("norm_2"), F.col("rep").alias("uid2")
     )
-    rp = (
+    rp = materialize(
         r1.join(r2, "block_key")
         .filter(F.col("uid1") < F.col("uid2"))
         .select("uid1", "uid2", "norm_1", "norm_2")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     matched = (
         _score_strings(rp.select("norm_1", "norm_2").distinct(), threshold)

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from character_identification_spark.session import local_frame
+from character_identification_spark.session import local_frame, materialize
 
 # Tiny per-language stopword inventories for the n-gram/stopword-ratio
 # language heuristic. Deliberately small and inline: broadcast-free (they
@@ -414,14 +414,16 @@ def _bpe_train(
         .agg(F.count(F.lit(1)).alias("wf"))
         .filter(F.length("word") >= 2)
     )
-    syms = words.select(
-        "word",
-        "wf",
-        F.transform(
-            F.sequence(F.lit(1), F.length("word")),
-            lambda i: F.col("word").substr(i, F.lit(1)),
-        ).alias("syms"),
-    ).localCheckpoint()
+    syms = materialize(
+        words.select(
+            "word",
+            "wf",
+            F.transform(
+                F.sequence(F.lit(1), F.length("word")),
+                lambda i: F.col("word").substr(i, F.lit(1)),
+            ).alias("syms"),
+        )
+    )
 
     out = []
     for step in range(1, n_merges + 1):
@@ -463,15 +465,17 @@ def _bpe_train(
 
             return fn
 
-        syms = syms.select(
-            "word",
-            "wf",
-            F.aggregate(
-                "syms",
-                F.array().cast("array<string>"),
-                _merge_fold(left, right, merged),
-            ).alias("syms"),
-        ).localCheckpoint()
+        syms = materialize(
+            syms.select(
+                "word",
+                "wf",
+                F.aggregate(
+                    "syms",
+                    F.array().cast("array<string>"),
+                    _merge_fold(left, right, merged),
+                ).alias("syms"),
+            )
+        )
     return syms, out
 
 

@@ -224,20 +224,13 @@ def _pipeline_stages(store: StageStore, pages: DataFrame, cfg: PipelineConfig) -
         ),
         cfg,
     )
-    caches: list = []
-    try:
-        assignments = _run_stage(
-            store,
-            "assignments",
-            ["name_clusters", "edge_split", "mentions"],
-            lambda: resolve_in_context(
-                mentions, name_clusters, amb_links, cache_registry=caches
-            ),
-            cfg,
-        )
-    finally:  # committed or failed, the helper cache is not needed again
-        for c in caches:
-            c.unpersist()
+    assignments = _run_stage(
+        store,
+        "assignments",
+        ["name_clusters", "edge_split", "mentions"],
+        lambda: resolve_in_context(mentions, name_clusters, amb_links),
+        cfg,
+    )
     entities = _run_stage(
         store,
         "entities",

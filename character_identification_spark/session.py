@@ -79,3 +79,16 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
     table = pa.table({f.name: list(c) for f, c in zip(struct.fields, columns)})
     return spark.createDataFrame(table, struct)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` computed now, once, and cut from its lineage. Under a
+    ``local[...]`` master: an eager ``localCheckpoint``, whose blocks
+    Spark's ContextCleaner drops once the frame is unreachable (no
+    registry to unpersist). Otherwise: an eager reliable ``checkpoint`` to
+    the context's checkpoint dir, which survives the loss of the executor
+    that computed it, where a local checkpoint block would not."""
+    master = df.sparkSession.sparkContext.master
+    if master == "local" or master.startswith("local["):
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)

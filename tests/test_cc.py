@@ -4,6 +4,7 @@ transitive closure of gold-labeled pairs must reproduce gold clusters)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from character_identification_spark.evaluation.pairf1 import (
@@ -81,6 +82,15 @@ def test_long_chain_many_rounds(spark):
     # never fire before the true fixpoint
     cc = _assign(connected_components(_edges(spark, [(i, i + 1) for i in range(1, 64)])))
     assert cc == {i: 1 for i in range(1, 65)}
+
+
+def test_exhausted_max_iter_raises(spark):
+    # the same 64-node chain needs more than one round: stopping after one
+    # would return partial merges, so the loop raises instead
+    path = _edges(spark, [(i, i + 1) for i in range(1, 64)])
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(path, max_iter=1)
+    assert set(_assign(connected_components(path)).values()) == {1}
 
 
 def test_gold_replay_fidelity(spark, small_corpus):

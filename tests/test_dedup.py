@@ -285,10 +285,13 @@ def test_minhash_dup_pairs_buckets_stable_under_repartition(spark, docs):
     """The capped bucket rows feeding minhash_dup_pairs are a pure
     function of the data: physical partitioning changes nothing, also
     when a cap of 1 salt-splits every shared bucket."""
-    from character_identification_spark.operators.dedup import _doc_buckets
+    from character_identification_spark.operators.dedup import (
+        _doc_buckets,
+        _doc_shingles,
+    )
 
     def rows(d, cap):
-        out = _doc_buckets(d, "doc_id", "text", 3, 16, 2, cap)
+        out = _doc_buckets(_doc_shingles(d, "doc_id", "text", 3), "doc_id", 16, 2, cap)
         return sorted(map(tuple, out.collect()))
 
     for cap in (1000, 1):
@@ -325,7 +328,11 @@ def test_minhash_dup_pairs_matches_capped_duckdb_twin(spark, docs, cap):
     )
     assert got == exp and got
     if cap == 2:
-        from character_identification_spark.operators.dedup import _doc_buckets
+        from character_identification_spark.operators.dedup import (
+            _doc_buckets,
+            _doc_shingles,
+        )
 
-        buckets = _doc_buckets(docs, "doc_id", "text", 3, 16, 2, cap).collect()
+        sh = _doc_shingles(docs, "doc_id", "text", 3)
+        buckets = _doc_buckets(sh, "doc_id", 16, 2, cap).collect()
         assert any("#" in r["bucket"] for r in buckets)

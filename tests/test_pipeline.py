@@ -197,8 +197,10 @@ def test_stage_facts_come_from_footers_without_spark_jobs(
 def test_failed_assignments_write_drops_helper_cache(
     spark, small_corpus, tmp_workdir, monkeypatch
 ):
-    """resolve_in_context's helper cache is unpersisted also when the
-    assignments write raises, so a long-lived session keeps no cached plan."""
+    """run_pipeline leaves no cached plan in a long-lived session: not
+    when the assignments write raises, and not after the resumed run
+    succeeds (resolve_in_context's reused join goes through
+    session.materialize, which registers nothing in the CacheManager)."""
     pages, gold = small_corpus
     orig_write = StageStore.write
 
@@ -212,6 +214,10 @@ def test_failed_assignments_write_drops_helper_cache(
     try:
         with pytest.raises(RuntimeError, match="assignments write failed"):
             run_pipeline(spark, pages, tmp_workdir, _cfg())
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        monkeypatch.undo()
+        res = run_pipeline(spark, pages, tmp_workdir, _cfg())
+        assert res["assignments"].count() > 0
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:  # the session-wide corpus fixture was cached: restore that
         pages.cache()

@@ -412,6 +412,7 @@ def test_minhash_signatures_zero_shuffle(spark):
     from character_identification_spark.functions.minhash import minhash_bands
     from character_identification_spark.operators.dedup import (
         _doc_buckets,
+        _doc_shingles,
         word_shingles,
     )
 
@@ -424,7 +425,7 @@ def test_minhash_signatures_zero_shuffle(spark):
     sigs = minhash_bands(docs, word_shingles("text", 3), ["doc_id"], 16, 2)
     assert "Exchange" not in plan_of(sigs), "sigs shuffle"
     assert "Exchange" not in plan_of(
-        _doc_buckets(docs, "doc_id", "text", 3, 16, 2, None)
+        _doc_buckets(_doc_shingles(docs, "doc_id", "text", 3), "doc_id", 16, 2, None)
     ), "bucket rows shuffle"
 
 
@@ -448,21 +449,24 @@ def test_canonical_entities_no_window_no_expand(spark):
 
 def test_cc_star_round_shuffle_budget(spark):
     """Round-6 claim, machine-checked: one large+small star composition
-    over an oriented-distinct input plans 11 Exchange nodes (the round-5
-    form with the symmetrize/orient distincts planned 14 — measured in
-    this round's A/B; identical ones collapse further via AQE exchange
+    over connected_components' oriented-distinct loop entry plans at most
+    11 Exchange nodes (the round-5 form with the symmetrize/orient
+    distincts planned 14; identical ones collapse further via AQE exchange
     reuse at runtime)."""
     import re
 
     from character_identification_spark.operators.cc import (
         _large_star,
-        _orient,
         _small_star,
     )
+    from character_identification_spark.operators.graph import undirected
+    from character_identification_spark.session import materialize
 
-    edges = _orient(
-        spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "u long, v long")
-    ).localCheckpoint(eager=True)
+    edges = materialize(
+        undirected(
+            spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "u long, v long"), "u", "v"
+        ).select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
     plan = plan_of(_small_star(_large_star(edges)))
     n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchange <= 11, f"{n_exchange} exchanges\n{plan}"

@@ -15,6 +15,7 @@ how a multi-executor cluster run distributes it. Usage:
 On a real cluster only --master / deploy-mode change; the stage
 checkpoints land in --workdir (Iceberg when --catalog is set), so a killed
 submit resumes from the last committed stage.
+Non-local masters checkpoint to spark.checkpoint.dir or <workdir>/_checkpoints.
 """
 
 from __future__ import annotations
@@ -47,6 +48,8 @@ def main() -> None:
     # not session.get_spark: under spark-submit the launcher sets the master and confs
     spark = SparkSession.builder.appName("ck-spark-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if spark.sparkContext.getCheckpointDir() is None:
+        spark.sparkContext.setCheckpointDir(f"{args.workdir.rstrip('/')}/_checkpoints")
     cfg = PipelineConfig(
         keep_lang=args.keep_lang,
         threshold=args.threshold,
