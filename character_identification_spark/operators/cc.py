@@ -13,7 +13,12 @@ replay fidelity test, reference latest/tools/test.py:4-36, asserts this
 closure reproduces gold clusters) — which is precisely what connected
 components computes, minus the order-dependence.
 
-Scale notes: each round is one groupBy + one join on longs;
+Scale notes: an undirected edge set of at most ``_DRIVER_EDGES`` rows
+(2^17, about 2 MB of long pairs) is fetched in one collect and finished on
+the driver with numpy, then handed back as a local frame — a small graph
+costs one job, not rounds of shuffles, convergence checks and checkpoints.
+The bound caps driver memory; it is not a per-workload tuning. Larger edge
+sets run the star loop: each round is one groupBy + one join on longs;
 session.materialize cuts the lineage after every round so plans don't
 grow with rounds; high-degree nodes are handled by large-star's design
 (neighbors > u re-attach to the min, so hot components star-collapse
@@ -22,11 +27,15 @@ instead of chaining); AQE re-sizes each round's shuffle.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from character_identification_spark.operators.graph import undirected
-from character_identification_spark.session import materialize
+from character_identification_spark.session import local_frame, materialize
+
+# largest undirected edge set finished on the driver (a driver-memory bound)
+_DRIVER_EDGES = 1 << 17
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -73,6 +82,33 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _driver_components(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, components) of the undirected edges u–v, on the driver.
+
+    ``np.unique`` maps the endpoints to sorted indices, so the minimum
+    index of a component is its minimum node id. Each round lowers the
+    label of both endpoints of every edge, and of their current labels, to
+    the lesser of the two labels (min-label propagation over both edge
+    directions), then pointer-jumps (``label = label[label]``) until every
+    node points at a root. A label is always an index in the node's own
+    component and never above it, so the fixpoint — every edge's
+    endpoints share a root — labels each component with its minimum."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    label = np.arange(len(nodes))
+    while True:
+        la, lb = label[a], label[b]
+        lo = np.minimum(la, lb)
+        new = label.copy()
+        for ends in (a, b, la, lb):
+            np.minimum.at(new, ends, lo)
+        while not np.array_equal(jumped := new[new], new):
+            new = jumped
+        if np.array_equal(new, label):
+            return nodes, nodes[label]
+        label = new
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
@@ -99,10 +135,28 @@ def connected_components(
     are required: a node with TWO parents (u duplicated) can satisfy (2)
     while its parents still await merging. When ``max_iter`` rounds end
     without that forest the edge set holds partial merges, not
-    components, so the call raises RuntimeError."""
+    components, so the call raises RuntimeError.
+
+    An undirected edge set of at most ``_DRIVER_EDGES`` rows never enters
+    the loop: one ``limit(_DRIVER_EDGES + 1)`` collect fetches it, the
+    components are finished on the driver (_driver_components) and come
+    back as a local frame with the same (node, component) contract. So
+    ``max_iter`` and ``converge_check_every`` bound only the star rounds
+    of larger edge sets."""
     cur = materialize(
         undirected(edges, "u", "v").select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
+    head = cur.limit(_DRIVER_EDGES + 1).toArrow()
+    if head.num_rows <= _DRIVER_EDGES:
+        nodes, comps = _driver_components(
+            head.column("u").to_numpy(), head.column("v").to_numpy()
+        )
+        key = cur.schema["u"].dataType.simpleString()
+        return local_frame(
+            cur.sparkSession,
+            list(zip(nodes.tolist(), comps.tolist())),
+            f"node {key}, component {key}",
+        )
     for i in range(max_iter):
         cur = materialize(_small_star(_large_star(cur)))
         if (i + 1) % converge_check_every and i + 1 < max_iter:

@@ -135,7 +135,9 @@ def name_cluster_table(
 
     Unambiguous names: their CC cluster (or themselves). Ambiguous names:
     the single candidate cluster if all matched anchors agree
-    (needs_ctx=false), else their own uid with needs_ctx=true.
+    (needs_ctx=false), else their own uid with needs_ctx=true. Candidate
+    clusters are never NULL, so "all agree" is min == max: one aggregate,
+    no distinct count.
     """
     amb_flag = ambiguous_col("norm")
     base = names.join(
@@ -152,10 +154,7 @@ def name_cluster_table(
     cands = (
         amb_links.join(anchor_clusters, "anchor_uid")
         .groupBy("amb_uid")
-        .agg(
-            F.countDistinct("cand").alias("n_cand"),
-            F.min("cand").alias("only_cand"),
-        )
+        .agg(F.min("cand").alias("only_cand"), F.max("cand").alias("max_cand"))
     )
     return base.join(
         cands.withColumnRenamed("amb_uid", "mention_uid"), "mention_uid", "left"
@@ -163,12 +162,11 @@ def name_cluster_table(
         "mention_uid",
         "norm",
         F.when(~F.col("is_amb"), F.col("base_cluster"))
-        .when(F.col("n_cand") == 1, F.col("only_cand"))
+        .when(F.col("only_cand") == F.col("max_cand"), F.col("only_cand"))
         .otherwise(F.col("mention_uid"))
         .alias("cluster_id"),
-        (F.col("is_amb") & (F.coalesce(F.col("n_cand"), F.lit(0)) > 1)).alias(
-            "needs_ctx"
-        ),
+        (F.col("is_amb") & F.coalesce(F.col("only_cand") < F.col("max_cand"), F.lit(False)))
+        .alias("needs_ctx"),
     )
 
 

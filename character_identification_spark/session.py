@@ -53,6 +53,8 @@ def get_spark(
         .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # materialize's reliable branch: unreachable checkpoints leave the disk
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -87,7 +89,9 @@ def materialize(df: DataFrame) -> DataFrame:
     Spark's ContextCleaner drops once the frame is unreachable (no
     registry to unpersist). Otherwise: an eager reliable ``checkpoint`` to
     the context's checkpoint dir, which survives the loss of the executor
-    that computed it, where a local checkpoint block would not."""
+    that computed it, where a local checkpoint block would not; its files
+    are removed once the frame is unreachable, because the session sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``."""
     master = df.sparkSession.sparkContext.master
     if master == "local" or master.startswith("local["):
         return df.localCheckpoint(eager=True)

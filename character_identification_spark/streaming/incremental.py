@@ -474,11 +474,12 @@ def incremental_attach(
             "left_semi",
         )
     )
+    # one candidate ⟺ min == max (anchor clusters are never NULL)
     amb_hits = (
         amb_links.join(anchor_map, "anchor_uid")
         .groupBy(F.col("amb_uid").alias("mention_uid"))
-        .agg(F.count_distinct("anchor_cluster").alias("n_cand"),
-             F.min("anchor_cluster").alias("cand_cluster"))
+        .agg(F.min("anchor_cluster").alias("cand_cluster"),
+             F.max("anchor_cluster").alias("max_cluster"))
     )
 
     # base-side ambiguous SINGLETONS may safely re-attach: moving a singleton
@@ -503,9 +504,9 @@ def incremental_attach(
         .join(base_singletons.select("mention_uid"), "mention_uid", "left_semi")
         .join(anchor_map, "anchor_uid")
         .groupBy("mention_uid")
-        .agg(F.count_distinct("anchor_cluster").alias("n_cand"),
-             F.min("anchor_cluster").alias("cand_cluster"))
-        .filter(F.col("n_cand") == 1)
+        .agg(F.min("anchor_cluster").alias("cand_cluster"),
+             F.max("anchor_cluster").alias("max_cluster"))
+        .filter(F.col("cand_cluster") == F.col("max_cluster"))
         .join(base_singletons, "mention_uid")
         .select(
             "mention_uid", "norm",
@@ -524,12 +525,14 @@ def incremental_attach(
             "norm",
             F.coalesce(
                 F.col("cluster_id"),
-                F.when(F.col("n_cand") == 1, F.col("cand_cluster")),
+                F.when(F.col("cand_cluster") == F.col("max_cluster"), F.col("cand_cluster")),
                 F.col("comp"),
                 F.col("mention_uid"),
             ).alias("cluster_id"),
-            (F.col("cluster_id").isNull() & (F.coalesce(F.col("n_cand"), F.lit(0)) > 1))
-            .alias("needs_ctx"),
+            (
+                F.col("cluster_id").isNull()
+                & F.coalesce(F.col("cand_cluster") < F.col("max_cluster"), F.lit(False))
+            ).alias("needs_ctx"),
         )
     )
     return {

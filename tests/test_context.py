@@ -52,6 +52,29 @@ def test_ambiguous_col(spark):
     }
 
 
+def test_name_cluster_table_single_candidate(spark):
+    # "ross" matches two anchors of ONE cluster → takes it; "rosa" matches
+    # anchors of TWO clusters → keeps its uid and needs context; "r" has no
+    # anchor → keeps its uid without context
+    names = spark.createDataFrame(
+        [(1, "ross geller"), (2, "ross gellar"), (3, "ross"), (4, "rosa taylor"),
+         (5, "rosa"), (6, "r")],
+        "mention_uid long, norm string",
+    )
+    assign = spark.createDataFrame([(1, 1), (2, 1)], "node long, component long")
+    amb = spark.createDataFrame(
+        [(3, 1), (3, 2), (5, 2), (5, 4)], "amb_uid long, anchor_uid long"
+    )
+    got = {
+        r.mention_uid: (r.cluster_id, r.needs_ctx)
+        for r in name_cluster_table(names, assign, amb).collect()
+    }
+    assert got == {
+        1: (1, False), 2: (1, False), 3: (1, False), 4: (4, False),
+        5: (5, True), 6: (6, False),
+    }
+
+
 def test_scale_f1_gate_with_shared_first_names(spark):
     """200 entities over 10k pages → many shared first names; the
     pairwise-F1 gate must hold through ambiguity resolution."""

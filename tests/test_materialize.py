@@ -5,7 +5,9 @@ master a reliable checkpoint to the context's checkpoint dir."""
 from __future__ import annotations
 
 import ast
+import gc
 import os
+import time
 from pathlib import Path
 
 from character_identification_spark import session
@@ -33,6 +35,15 @@ def test_reliable_branch_writes_to_checkpoint_dir(spark, tmp_path, monkeypatch):
     reliable = materialize(df)
     assert sorted(map(tuple, reliable.collect())) == want
     assert _files_under(ckpt)
+
+    # unreachable reliable checkpoints are removed by the ContextCleaner
+    del reliable
+    deadline = time.monotonic() + 60
+    while _files_under(ckpt) and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert _files_under(ckpt) == []
 
 
 def test_package_cuts_lineage_only_through_materialize():

@@ -46,7 +46,12 @@ def main() -> None:
     )
 
     # not session.get_spark: under spark-submit the launcher sets the master and confs
-    spark = SparkSession.builder.appName("ck-spark-pipeline").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ck-spark-pipeline")
+        # session.materialize's reliable checkpoints leave the disk once unreachable
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
     if spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(f"{args.workdir.rstrip('/')}/_checkpoints")
