@@ -46,7 +46,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from character_identification_spark.session import DEFAULT_CPUS, get_spark
 
@@ -166,7 +165,7 @@ def _scale_worker(cores: int, pages_path: str) -> None:
     into a fresh workdir, print the wall seconds, remove the workdir. One
     JVM per measurement — session reuse across masters leaks broken
     accumulator channels that tax every task of the second session."""
-    from character_identification_spark.ingest.extract import extract_text
+    from character_identification_spark.ingest.mentions import extract_mentions
     from character_identification_spark.plans.pipeline import (
         PipelineConfig,
         run_pipeline,
@@ -174,8 +173,9 @@ def _scale_worker(cores: int, pages_path: str) -> None:
 
     spark = bench_session(f"bench-scaling-{cores}", cores)
     pages = spark.read.parquet(pages_path)
-    # warm the python-worker pool (pandas UDF) outside the timed window
-    _force(pages.select(extract_text(F.col("html")).alias("x")))
+    # warm the python-worker pool outside the timed window: mention
+    # extraction (mapInPandas) is the pipeline's first Python stage
+    _force(extract_mentions(pages))
     workdir = tempfile.mkdtemp(prefix="bench_scale_")
     try:
         t0 = time.monotonic()

@@ -5,7 +5,10 @@ lang)``. The ``text`` column is ground truth produced by the upstream
 (reference) extractor; our extractor must reproduce it byte-identically from
 ``html`` (BASELINE.json input_hint). The fixture generator wraps text in a
 deterministic HTML shell with entity escaping; ``extract_text`` is its exact
-inverse. Both are Arrow-vectorized pandas UDFs — no per-row Python UDFs.
+inverse. Both are Catalyst expressions (replace / encode / decode /
+regexp_extract), so the extract stage is a codegen projection with no Python
+worker. NULL maps to NULL, html without an ``<article>`` extracts to ``""``,
+and malformed UTF-8 fails the task.
 
 At 100 TB the html column dominates I/O: the extract stage projects only
 (url, html), so Parquet column pruning skips text/lang entirely, and the
@@ -14,45 +17,30 @@ output checkpoint stores text once.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _PRE = '<html><head><meta charset="utf-8"></head><body><article>'
 _POST = "</article></body></html>"
-_BODY_RE = re.compile(r"<article>(.*?)</article>", re.DOTALL)
+# entity escapes in wrap order; extract undoes them in reverse, so a
+# literal "&lt;" in the text comes back from "&amp;lt;" unchanged
+_ENTITIES = (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"))
 
 
-def _escape(t: str) -> str:
-    return t.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-
-
-def _unescape(t: str) -> str:
-    return t.replace("&gt;", ">").replace("&lt;", "<").replace("&amp;", "&")
-
-
-@F.pandas_udf(T.BinaryType())
-def wrap_html(text: pd.Series) -> pd.Series:
+def wrap_html(text: Column) -> Column:
     """Deterministic HTML shell around text (fixture generator side)."""
-    return text.map(
-        lambda t: (_PRE + _escape(t) + _POST).encode("utf-8") if t is not None else None
-    )
+    for raw, ent in _ENTITIES:
+        text = F.replace(text, F.lit(raw), F.lit(ent))
+    return F.encode(F.concat(F.lit(_PRE), text, F.lit(_POST)), "UTF-8")
 
 
-@F.pandas_udf(T.StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """Inverse of wrap_html; byte-identical text per url."""
-
-    def _x(b):
-        if b is None:
-            return None
-        m = _BODY_RE.search(bytes(b).decode("utf-8"))
-        return _unescape(m.group(1)) if m else ""
-
-    return html.map(_x)
+def extract_text(html: Column) -> Column:
+    """Inverse of wrap_html; byte-identical text per url. ``(?s)`` lets
+    ``.`` cross newlines, as the shell's body may span lines."""
+    body = F.regexp_extract(F.decode(html, "UTF-8"), r"(?s)<article>(.*?)</article>", 1)
+    for raw, ent in reversed(_ENTITIES):
+        body = F.replace(body, F.lit(ent), F.lit(raw))
+    return body
 
 
 def extracted_pages(pages, keep_lang: str | None = "en"):
@@ -61,10 +49,6 @@ def extracted_pages(pages, keep_lang: str | None = "en"):
     parquet scan prunes the heavy binary column out of later stages."""
     out = pages
     if keep_lang is not None:
-        # filter BEFORE the UDF projection: Catalyst does not push
-        # predicates through Python-eval nodes, so ordering it here is
-        # what gets the lang filter into the parquet scan (and skips the
-        # decode UDF for filtered rows entirely)
         out = out.filter(F.col("lang") == keep_lang)
     return out.select(
         "url", "warc_ts", extract_text(F.col("html")).alias("text"), "lang"

@@ -112,19 +112,23 @@ def name_edge_table(scored: DataFrame, threshold: float | None = None) -> DataFr
     ).filter(F.col("role").isNotNull())
 
 
-def split_name_edges(
-    scored: DataFrame, threshold: float | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Two-view form of name_edge_table:
+def edge_views(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """name_edge_table output (role, a, b) → its two role views:
     (safe_edges(u, v), amb_links(amb_uid, anchor_uid))."""
-    t = name_edge_table(scored, threshold)
-    safe = t.filter(F.col("role") == "safe").select(
+    safe = edges.filter(F.col("role") == "safe").select(
         F.col("a").alias("u"), F.col("b").alias("v")
     )
-    amb = t.filter(F.col("role") == "amb").select(
+    amb = edges.filter(F.col("role") == "amb").select(
         F.col("a").alias("amb_uid"), F.col("b").alias("anchor_uid")
     )
     return safe, amb
+
+
+def split_name_edges(
+    scored: DataFrame, threshold: float | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Two-view form of name_edge_table (see edge_views)."""
+    return edge_views(name_edge_table(scored, threshold))
 
 
 def name_cluster_table(

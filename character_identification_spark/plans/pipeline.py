@@ -61,6 +61,7 @@ from character_identification_spark.operators.blocking import assign_blocks
 from character_identification_spark.operators.canonicalize import canonical_entities
 from character_identification_spark.operators.cc import connected_components
 from character_identification_spark.operators.context import (
+    edge_views,
     name_cluster_table,
     name_edge_table,
     resolve_in_context,
@@ -89,6 +90,12 @@ class PipelineConfig:
     # Flip to 128 (full md5 hex strings) for 10^9+-name vocabularies,
     # where 60-bit collision probability (~0.4) makes the assert trip.
     name_key_bits: int = 60
+
+    def __post_init__(self):
+        if self.name_key_bits not in (60, 128):
+            raise ValueError(
+                f"name_key_bits must be 60 or 128, got {self.name_key_bits}"
+            )
 
 
 def _run_stage(store: StageStore, name: str, inputs: list[str], build, cfg: PipelineConfig) -> DataFrame:
@@ -205,12 +212,7 @@ def _pipeline_stages(store: StageStore, pages: DataFrame, cfg: PipelineConfig) -
         lambda: name_edge_table(scored, cfg.threshold),
         cfg,
     )
-    edges = edge_split.filter(F.col("role") == "safe").select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    )
-    amb_links = edge_split.filter(F.col("role") == "amb").select(
-        F.col("a").alias("amb_uid"), F.col("b").alias("anchor_uid")
-    )
+    edges, amb_links = edge_views(edge_split)
     name_clusters = _run_stage(
         store,
         "name_clusters",

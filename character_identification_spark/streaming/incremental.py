@@ -375,8 +375,11 @@ def incremental_attach(
     "merge_queue": (cluster_a, cluster_b, evidence_uid)}.
     """
     from character_identification_spark.operators.blocking import assign_blocks
-    from character_identification_spark.operators.context import name_edge_table
-    from character_identification_spark.operators.scoring import score_pairs
+    from character_identification_spark.operators.context import split_name_edges
+    from character_identification_spark.operators.scoring import (
+        DEFAULT_THRESHOLD,
+        score_pairs,
+    )
 
     from character_identification_spark.operators.cc import connected_components
 
@@ -407,21 +410,19 @@ def incremental_attach(
         all_norms.select(F.col("mention_uid").alias("uid2"), F.col("norm").alias("norm_2")),
         "uid2",
     )
-    scored = score_pairs(pairs, dedup_strings=False) if threshold is None else (
-        score_pairs(pairs, threshold, dedup_strings=False)
-    )
-    edges = name_edge_table(scored, threshold)
+    thr = DEFAULT_THRESHOLD if threshold is None else threshold
+    scored = score_pairs(pairs, thr, dedup_strings=False)
+    safe, amb = split_name_edges(scored, thr)
     base_map = base_clusters.select(
         F.col("mention_uid").alias("anchor_uid"), F.col("cluster_id").alias("anchor_cluster")
     )
 
-    # safe rows keep (a, b) = (uid1, uid2); split drop-internal edges
+    # safe edges keep (u, v) = (uid1, uid2); split drop-internal edges
     # (both new) from anchor edges (uid2 in base)
     new_ids = new_names.select("mention_uid")
-    safe = edges.filter(F.col("role") == "safe")
     drop_edges = safe.join(
-        new_ids.withColumnRenamed("mention_uid", "b"), "b", "left_semi"
-    ).select(F.col("a").alias("u"), F.col("b").alias("v"))
+        new_ids.withColumnRenamed("mention_uid", "v"), "v", "left_semi"
+    )
     # drop-local components: bounded by the drop, a few CC rounds
     comp = connected_components(drop_edges).withColumnRenamed("node", "mention_uid")
     with_comp = new_ids.join(comp, "mention_uid", "left").select(
@@ -429,8 +430,8 @@ def incremental_attach(
         F.coalesce(F.col("component"), F.col("mention_uid")).alias("comp"),
     )
     anchor_hits = (
-        safe.join(base_map.withColumnRenamed("anchor_uid", "b"), "b")
-        .select(F.col("a").alias("mention_uid"), "anchor_cluster")
+        safe.join(base_map.withColumnRenamed("anchor_uid", "v"), "v")
+        .select(F.col("u").alias("mention_uid"), "anchor_cluster")
         .join(with_comp, "mention_uid")
         .groupBy("comp")
         .agg(
@@ -465,14 +466,10 @@ def incremental_attach(
     anchor_map = base_map.unionByName(new_assign_map)
 
     # amb links whose ambiguous side is a NEW name
-    amb_links = (
-        edges.filter(F.col("role") == "amb")
-        .select(F.col("a").alias("amb_uid"), F.col("b").alias("anchor_uid"))
-        .join(
-            new_names.select(F.col("mention_uid").alias("amb_uid")),
-            "amb_uid",
-            "left_semi",
-        )
+    amb_links = amb.join(
+        new_names.select(F.col("mention_uid").alias("amb_uid")),
+        "amb_uid",
+        "left_semi",
     )
     # one candidate ⟺ min == max (anchor clusters are never NULL)
     amb_hits = (
@@ -499,8 +496,7 @@ def incremental_attach(
         .select("mention_uid", "norm")
     )
     reassigned = (
-        edges.filter(F.col("role") == "amb")
-        .select(F.col("a").alias("mention_uid"), F.col("b").alias("anchor_uid"))
+        amb.withColumnRenamed("amb_uid", "mention_uid")
         .join(base_singletons.select("mention_uid"), "mention_uid", "left_semi")
         .join(anchor_map, "anchor_uid")
         .groupBy("mention_uid")

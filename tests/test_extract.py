@@ -19,6 +19,9 @@ TRICKY = [
     "",
     "nested <article>inner</article> tags",
     "double && and <<>> runs &amp;&amp;",
+    "multi\r\nline\twith <tabs>\n& newlines\r\n",
+    "non-BMP 😀𝔘 & <astral>",
+    "double-escaped &amp;lt; stays",
 ]
 
 
@@ -33,6 +36,25 @@ def test_round_trip_byte_identical(spark):
     for row in out:
         assert row["back"] == row["text"], f"row {row['i']}: {row['back']!r} != {row['text']!r}"
         assert row["back"].encode("utf-8") == row["text"].encode("utf-8")
+
+
+def test_null_and_missing_article(spark):
+    """NULL text wraps to NULL html and extracts back to NULL; html with
+    no <article> body extracts to the empty string."""
+    df = spark.createDataFrame(
+        [(0, None, None), (1, None, bytearray(b"<html><body>no body</body></html>"))],
+        "i int, text string, raw binary",
+    )
+    out = {
+        r["i"]: r
+        for r in df.select(
+            "i",
+            extract_text(wrap_html(F.col("text"))).alias("back"),
+            extract_text(F.col("raw")).alias("bare"),
+        ).collect()
+    }
+    assert out[0]["back"] is None and out[0]["bare"] is None
+    assert out[1]["bare"] == ""
 
 
 def test_extracted_pages_filters_lang_and_projects(spark):

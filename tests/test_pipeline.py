@@ -288,3 +288,6 @@ def test_name_key_collision_fails_loudly(spark, small_corpus, tmp_workdir, monke
     with pytest.raises(RuntimeError, match="name-key collision"):
         run_pipeline(spark, pages, tmp_workdir, PipelineConfig(force=True))
     assert not os.path.exists(os.path.join(tmp_workdir, "block_assign"))
+    # only the two documented widths exist; any other fails before a stage
+    with pytest.raises(ValueError, match="name_key_bits"):
+        PipelineConfig(name_key_bits=64)

@@ -39,6 +39,8 @@ def test_lang_filter_pushes_to_pages_scan(spark, small_corpus, tmp_path):
     # the lang predicate appears among the pushed filters
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("lang" in ln for ln in pushed), pushed
+    # the extractor is Catalyst expressions: no Python worker in the stage
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 @needs_data
