@@ -73,6 +73,7 @@ from character_identification_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
     knn_graph,
+    sign_lsh_bucket,
 )
 from character_identification_spark.operators.textstats import (
     bpe_ish_token_count,
@@ -1222,18 +1223,30 @@ def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_bucket(first_plane: int = 0):
+    """4-plane sign-LSH bucket of the ``embedding`` column, over planes
+    first_plane..first_plane+3."""
+    return sign_lsh_bucket(
+        "embedding", F.size(F.col("embedding")), 4, first_plane=first_plane
+    )
+
+
 def q_similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection bucket ids — value-level proof that the
-    md5-derived hyperplanes (operators/similarity.plane_component) are
+    md5-derived hyperplanes (operators/similarity.plane_dot) are
     engine-independent pure functions."""
-    from character_identification_spark.operators.similarity import sign_lsh_bucket
+    return _emb_double(spark, sf_dir).select("vec_id", _lsh_bucket().alias("bucket"))
 
-    e = _emb_double(spark, sf_dir)
-    return e.select(
+
+def _lsh_eval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cluster_id, entity): each embedding's 4-plane sign-LSH
+    bucket as its auto cluster and its label as gold — the frame the
+    B³, Blanc and linking-F1 evaluators score (DuckDB twin:
+    oracles._EVAL_M)."""
+    return _emb_double(spark, sf_dir).select(
         "vec_id",
-        sign_lsh_bucket("embedding", F.size(F.col("embedding")), n_planes=4).alias(
-            "bucket"
-        ),
+        _lsh_bucket().alias("cluster_id"),
+        F.col("label").cast("long").alias("entity"),
     )
 
 
@@ -1241,16 +1254,7 @@ def q_eval_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B³ evaluation operator (SURVEY §2 A6 / reference evaluators.py:34-58)
     scoring the 4-plane LSH bucketing against the embeddings' gold label —
     per-mention P = |gold∩auto|/|auto|, R = |gold∩auto|/|gold|, averaged."""
-    from character_identification_spark.operators.similarity import sign_lsh_bucket
-
-    e = _emb_double(spark, sf_dir)
-    m = e.select(
-        "vec_id",
-        sign_lsh_bucket("embedding", F.size(F.col("embedding")), n_planes=4).alias(
-            "cluster_id"
-        ),
-        F.col("label").cast("long").alias("entity"),
-    )
+    m = _lsh_eval_frame(spark, sf_dir)
     cell = m.groupBy("cluster_id", "entity").agg(F.count("*").alias("ov"))
     csz = m.groupBy("cluster_id").agg(F.count("*").alias("cn"))
     esz = m.groupBy("entity").agg(F.count("*").alias("en"))
@@ -1283,16 +1287,7 @@ def q_eval_blanc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes (Σ n·(n−1)/2), never from a materialized pair join, so the
     evaluator is three aggregations at any corpus size. Auto clustering =
     4-plane sign-LSH bucket, gold = embedding label (as eval_bcubed)."""
-    from character_identification_spark.operators.similarity import sign_lsh_bucket
-
-    e = _emb_double(spark, sf_dir)
-    m = e.select(
-        "vec_id",
-        sign_lsh_bucket("embedding", F.size(F.col("embedding")), n_planes=4).alias(
-            "cluster_id"
-        ),
-        F.col("label").cast("long").alias("entity"),
-    )
+    m = _lsh_eval_frame(spark, sf_dir)
     pairs2 = lambda c: F.sum(F.col(c) * (F.col(c) - 1)).cast("long")  # noqa: E731
     # 2× pair counts (avoid /2 until the end: stays integral)
     both2 = (
@@ -1332,16 +1327,7 @@ def q_eval_linking_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto counts across labels). The demo linker predicts each vector's
     label as the majority gold label of its sign-LSH bucket — a
     relational argmax, no model."""
-    from character_identification_spark.operators.similarity import sign_lsh_bucket
-
-    e = _emb_double(spark, sf_dir)
-    m = e.select(
-        "vec_id",
-        sign_lsh_bucket("embedding", F.size(F.col("embedding")), n_planes=4).alias(
-            "cluster_id"
-        ),
-        F.col("label").cast("long").alias("entity"),
-    )
+    m = _lsh_eval_frame(spark, sf_dir)
     cell = m.groupBy("cluster_id", "entity").agg(F.count("*").alias("n"))
     maj = topk_per_group(
         cell, ["cluster_id"], [F.col("n").desc(), F.col("entity").asc()], 1
@@ -1395,37 +1381,11 @@ def q_eval_pairf1_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     agrees), scored against gold = label equality. The set-intersection
     predicate is exactly what evaluation.pairf1.pairwise_f1_multi applies
     to plural mentions."""
-    from character_identification_spark.operators.similarity import plane_component
-
-    e = _emb_double(spark, sf_dir)
-    dimc = F.size(F.col("embedding"))
-
-    def bucket(offset):
-        bits = []
-        for p in range(4):
-            dp = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.transform(
-                        F.sequence(F.lit(0), dimc - 1),
-                        lambda d: plane_component(F.lit(offset + p), d),
-                    ),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(dp >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out.cast("long")
-
-    v = e.select(
+    v = _emb_double(spark, sf_dir).select(
         F.col("vec_id"),
         F.col("label").cast("long").alias("label"),
-        bucket(0).alias("b0"),
-        bucket(4).alias("b1"),
+        _lsh_bucket(first_plane=0).alias("b0"),
+        _lsh_bucket(first_plane=4).alias("b1"),
     )
     a = v.select(
         F.col("vec_id").alias("id1"), F.col("label").alias("l1"),

@@ -32,6 +32,14 @@ def h_long(col: Column | str, width: int = HEX_WIDTH) -> Column:
     return F.conv(h_hex(col, width), 16, 10).cast("long")
 
 
+def h_unit(col: Column | str) -> Column:
+    """Stable pseudo-random double in [-1, 1): h_long / 2^59 - 1. The one
+    md5 unit draw behind the hyperplane components (operators/similarity)
+    and the hash embedding (functions/vectors); the division comes before
+    the subtraction so the doubles match ``dd_h_unit`` bit for bit."""
+    return (h_long(col) / F.lit(float(2**59))) - 1.0
+
+
 # --- DuckDB SQL text equivalents (for oracle_sql) ---------------------------
 
 def dd_h_hex(expr: str, width: int = HEX_WIDTH) -> str:
@@ -40,3 +48,7 @@ def dd_h_hex(expr: str, width: int = HEX_WIDTH) -> str:
 
 def dd_h_long(expr: str, width: int = HEX_WIDTH) -> str:
     return f"CAST(CAST('0x' || {dd_h_hex(expr, width)} AS UBIGINT) AS BIGINT)"
+
+
+def dd_h_unit(expr: str) -> str:
+    return f"(({dd_h_long(expr)} / 576460752303423488.0) - 1.0)"

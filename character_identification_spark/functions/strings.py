@@ -3,8 +3,8 @@
 The reference's only string feature is an O(len^2) LCS similarity computed
 per pair in Python (reference: python/util/__init__.py:57-79, used at
 python/experiments/latest/model/features.py:151-155). Here the hot-path
-builtin is ``F.levenshtein`` (JVM, codegen); Jaro-Winkler and LCS ratios are
-Arrow-vectorized pandas UDFs — batch transfer, no per-row Python UDF serde.
+builtin is ``F.levenshtein`` (JVM, codegen); Jaro-Winkler is an
+Arrow-vectorized pandas UDF — batch transfer, no per-row Python UDF serde.
 """
 
 from __future__ import annotations
@@ -187,30 +187,3 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
         # exactly np.unique(codes) since factorize assigns codes 0,1,2,…
         out[mask] = uvals[codes]
     return out
-
-
-def _lcs_len(a: str, b: str) -> int:
-    # O(len(a)*len(b)) DP, one rolling row
-    if not a or not b:
-        return 0
-    prev = [0] * (len(b) + 1)
-    for ca in a:
-        cur = [0]
-        for j, cb in enumerate(b):
-            cur.append(prev[j] + 1 if ca == cb else max(prev[j + 1], cur[j]))
-        prev = cur
-    return prev[-1]
-
-
-@F.pandas_udf(T.ArrayType(T.DoubleType()))
-def lcs_ratio_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    """Reference's two LCS features: |lcs|/|s1| and |lcs|/|s2|
-    (reference: features.py:151-155)."""
-    out = []
-    for a, b in zip(s1, s2):
-        if a is None or b is None or not a or not b:
-            out.append([0.0, 0.0])
-        else:
-            l = float(_lcs_len(a, b))
-            out.append([l / len(a), l / len(b)])
-    return pd.Series(out)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from character_identification_spark.functions.hashing import h_unit
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -40,32 +42,20 @@ def cosine_sim(a: Column | str, b: Column | str) -> Column:
 
 def hash_embedding(col: Column | str, dim: int = 16, n_gram: int = 3) -> Column:
     """Deterministic bag-of-shingles embedding: component d = Σ over the
-    string's distinct character n-grams of an md5-derived pseudo-random
-    value in [-1, 1) (same primitive as operators/similarity.plane_component,
-    seeded by (d, shingle)). Strings sharing shingles get correlated
-    vectors — a pure-function analog of the reference's mention encoder
-    (reference: latest/model/coref.py:40-70) with the determinism rule
-    SURVEY.md §7.3 demands, computable identically in DuckDB SQL."""
+    string's distinct character n-grams of the md5 unit draw
+    ``h_unit("d|shingle")`` in [-1, 1) (the same draw the sign-LSH and JL
+    hyperplanes use, keyed by shingle instead of plane). Strings sharing
+    shingles get correlated vectors — a pure-function analog of the
+    reference's mention encoder (reference: latest/model/coref.py:40-70)
+    with the determinism rule SURVEY.md §7.3 demands, computable
+    identically in DuckDB SQL."""
     from character_identification_spark.operators.blocking import char_shingles
 
     sh = char_shingles(col, n_gram)
 
     def comp(d: int) -> Column:
         return F.aggregate(
-            F.transform(
-                sh,
-                lambda s: (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat_ws("|", F.lit(str(d)), s)), 1, 15
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    / F.lit(float(2**59))
-                )
-                - 1.0,
-            ),
+            F.transform(sh, lambda s: h_unit(F.concat_ws("|", F.lit(str(d)), s))),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )

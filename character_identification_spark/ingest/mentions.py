@@ -1,11 +1,24 @@
-"""Mention extraction from page text.
+r"""Mention extraction from page text.
 
 The reference slices mention spans out of gold ``character_entities``
 annotations (reference: latest/tools/ioutils.py:111-132). A web corpus has
 no annotations, so the engine extracts person-name-like mentions itself:
 maximal runs of capitalized tokens. Implemented with ``mapInPandas`` —
-one Arrow batch in, one out, vectorized regex via pandas ``str`` ops where
-possible and a compiled finditer per text (batched, not per-row UDF serde).
+one Arrow batch in, one out, a compiled ``finditer`` loop per text
+(batched, not per-row UDF serde).
+
+Why this stays a Python stage: a Catalyst prototype (``regexp_extract_all``
+for the surfaces, ``split`` plus an ``aggregate`` fold for the offsets,
+``[\p{L}\p{N}_'’\-]`` standing in for Python's ``\w`` — Java's ``(?U)\w``
+differs on combining marks and ``²``) was byte-identical on a 2k-page
+crawl corpus (4,995 mentions) and on Unicode edge cases, and faster there
+(stage wall time 0.32–0.48 s against 0.43–0.69 s). It lost on denser pages: warm write
+wall time on local[4] was 2.17–2.50 s against 1.75–2.06 s at 30 hits/page
+× 20k pages, 3.2–3.8 against 1.4–1.5 s at 1,000 × 600, and 6.4–6.6
+against 1.5–1.6 s at 3,000 × 200. Higher-order-function lambdas are
+interpreted, not code-generated, and the offset fold copies its array at
+every step, so the JVM form's cost per page grows faster than its
+mention count.
 
 Output grain: one row per mention, denormalized with its page key — the
 Spark analog of the reference's object back-pointers

@@ -32,7 +32,6 @@ def score_pairs(
     threshold: float = DEFAULT_THRESHOLD,
     with_embeddings: bool = False,
     dedup_strings: bool = True,
-    with_lcs: bool = False,
 ) -> DataFrame:
     """pairs(…, norm_1, norm_2[, emb_1, emb_2]) → + jw, lev_ratio,
     tok_jaccard[, cos_sim], score, is_match.
@@ -45,19 +44,18 @@ def score_pairs(
     """
     if dedup_strings and not with_embeddings:
         uniq = pairs.select("norm_1", "norm_2").distinct()
-        feats = _score_strings(uniq, threshold, with_lcs=with_lcs)
+        feats = _score_strings(uniq, threshold)
         # left join: a pair with a NULL norm keeps its row (null features,
         # is_match null→false downstream) — same behavior as the direct
         # path instead of silently dropping it in the inner join
         return pairs.join(feats, ["norm_1", "norm_2"], "left")
-    return _score_strings(pairs, threshold, with_embeddings, with_lcs)
+    return _score_strings(pairs, threshold, with_embeddings)
 
 
 def _score_strings(
     pairs: DataFrame,
     threshold: float,
     with_embeddings: bool = False,
-    with_lcs: bool = False,
 ) -> DataFrame:
     n1, n2 = F.col("norm_1"), F.col("norm_2")
     t1, t2 = F.split(n1, " "), F.split(n2, " ")
@@ -98,18 +96,6 @@ def _score_strings(
         & (F.least(F.length(f1), F.length(f2)) == 1)
         & (f1.startswith(f2) | f2.startswith(f1)),
     )
-    if with_lcs:
-        # the reference's own string similarity — its ONLY one
-        # (reference: python/util/__init__.py:57-79, features.py:151-155):
-        # |LCS|/|s1| and |LCS|/|s2|, blended via their min (symmetric,
-        # penalizes containment-only overlap the way the reference's
-        # two-sided feature pair does)
-        from character_identification_spark.functions.strings import lcs_ratio_udf
-
-        scored = scored.withColumn("lcs2", lcs_ratio_udf(n1, n2)).withColumn(
-            "lcs_ratio",
-            F.least(F.element_at("lcs2", 1), F.element_at("lcs2", 2)),
-        ).drop("lcs2")
     if with_embeddings:
         scored = scored.withColumn("cos_sim", cosine_sim("emb_1", "emb_2"))
         score = (
@@ -117,13 +103,6 @@ def _score_strings(
             + 0.2 * F.col("lev_ratio")
             + 0.15 * F.col("tok_jaccard")
             + 0.3 * ((F.col("cos_sim") + 1.0) / 2.0)
-        )
-    elif with_lcs:
-        score = (
-            0.4 * F.col("jw")
-            + 0.2 * F.col("lev_ratio")
-            + 0.15 * F.col("tok_jaccard")
-            + 0.25 * F.col("lcs_ratio")
         )
     else:
         score = 0.5 * F.col("jw") + 0.3 * F.col("lev_ratio") + 0.2 * F.col("tok_jaccard")

@@ -28,7 +28,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from character_identification_spark.functions.hashing import h_long
+from character_identification_spark.functions.hashing import h_long, h_unit
 from character_identification_spark.functions.partitioning import topk_per_group
 from character_identification_spark.functions.vectors import cosine_sim
 
@@ -48,37 +48,36 @@ def planes_for(n_rows: int, target_bucket_size: int = 1000) -> int:
     return max(2, min(24, math.ceil(math.log2(max(2.0, n_rows / target_bucket_size)))))
 
 
-def plane_component(plane, dim):
-    """Deterministic pseudo-random hyperplane component in [-1, 1):
-    (md5_60bit(plane|dim) / 2^59) - 1. Same formula is expressible in
-    DuckDB SQL for oracle parity."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("|", plane.cast("string"), dim.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    return (h / F.lit(float(2**59))) - 1.0
-
-
-def sign_lsh_bucket(vec_col, dim_count, n_planes: int = 8):
-    """Bucket id = integer of sign bits of <v, plane_i>, planes indexed
-    0..n_planes-1, computed fully JVM-side (no UDF)."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = []
-    for p in range(n_planes):
-        dp = F.aggregate(
-            F.zip_with(
-                v,
-                F.transform(
-                    F.sequence(F.lit(0), dim_count - 1),
-                    lambda d: plane_component(F.lit(p), d),
-                ),
-                lambda x, y: x.cast("double") * y,
+def plane_dot(v, dim_count, plane: int | str):
+    """<v, r_plane> over the md5 hyperplane family: component d of plane
+    ``plane`` is ``h_unit("plane|d")`` in [-1, 1), recomputed inside the
+    expression (no matrix is ever materialized). ``dim_count`` is a
+    Column; the DuckDB twin is oracles._dd_plane_dot."""
+    key = F.lit(str(plane))
+    return F.aggregate(
+        F.zip_with(
+            v,
+            F.transform(
+                F.sequence(F.lit(0), dim_count - 1),
+                lambda d: h_unit(F.concat_ws("|", key, d.cast("string"))),
             ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dp >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
+            lambda x, y: x.cast("double") * y,
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def sign_lsh_bucket(vec_col, dim_count, n_planes: int = 8, first_plane: int = 0):
+    """Bucket id = integer of sign bits of <v, plane_i>, planes indexed
+    first_plane..first_plane+n_planes-1 (bit p ↔ plane first_plane+p),
+    computed fully JVM-side (no UDF). Multi-table bucketings take
+    disjoint plane windows through ``first_plane``."""
+    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+    bits = [
+        F.when(plane_dot(v, dim_count, first_plane + p) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        for p in range(n_planes)
+    ]
     out = bits[0]
     for b in bits[1:]:
         out = out + b
@@ -239,33 +238,10 @@ def ann_candidates(
         n_planes = planes_for(corpus.count(), max_bucket_size or 1000)
     dimc = F.size(F.col(vec_col))
 
-    def _table_bucket_int(t):
-        # planes t*n_planes .. t*n_planes+n_planes-1
-        v = F.col(vec_col)
-        bits = []
-        for p in range(n_planes):
-            dp = F.aggregate(
-                F.zip_with(
-                    v,
-                    F.transform(
-                        F.sequence(F.lit(0), dimc - 1),
-                        lambda d: plane_component(F.lit(t * n_planes + p), d),
-                    ),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(dp >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
     def bucketed(df, idc, probe: bool = False):
         u = None
         for t in range(n_tables):
-            b = _table_bucket_int(t)
+            b = sign_lsh_bucket(vec_col, dimc, n_planes, first_plane=t * n_planes)
             if probe:
                 # the bucket itself + every 1-bit flip, as one query-side
                 # explode — the corpus side stays single-bucket
@@ -473,27 +449,8 @@ def jl_project(
     Distance preservation follows JL for out_dim = O(log n / eps^2);
     unit-tested against an independent numpy replication.
     """
-    import math
-
     v = F.col(vec_col)
+    dimc = F.lit(dim_count)
     norm = math.sqrt(float(out_dim))
-
-    # Closure factory, NOT `lambda d, j=j`: a two-parameter lambda would
-    # receive (element, array_index) from Spark's higher-order transform
-    # and silently shadow j with the index column (CLAUDE.md invariant).
-    def _plane(j: int):
-        return lambda d: plane_component(F.lit(f"jl{j}"), d)
-
-    comps = []
-    for j in range(out_dim):
-        dp = F.aggregate(
-            F.zip_with(
-                v,
-                F.transform(F.sequence(F.lit(0), F.lit(dim_count - 1)), _plane(j)),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        comps.append(dp / F.lit(norm))
+    comps = [plane_dot(v, dimc, f"jl{j}") / F.lit(norm) for j in range(out_dim)]
     return emb.select(F.col(id_col), F.array(*comps).alias("proj"))

@@ -18,7 +18,7 @@ engines disagree on formatting.
 
 from __future__ import annotations
 
-from character_identification_spark.functions.hashing import dd_h_long
+from character_identification_spark.functions.hashing import dd_h_long, dd_h_unit
 from character_identification_spark.functions.minhash import dd_minhash_bands
 
 # --------------------------------------------------------------------------
@@ -256,13 +256,8 @@ FROM decided
 
 def _dd_embed_comp(d: int) -> str:
     """DuckDB twin of functions/vectors.hash_embedding component d."""
-    h = (
-        f"CAST(CAST('0x' || substr(md5('{d}|' || s), 1, 15) AS UBIGINT) AS BIGINT)"
-    )
-    return (
-        "list_sum(list_transform(sh, s -> "
-        f"(({h} / 576460752303423488.0) - 1.0)))"
-    )
+    comp = dd_h_unit(f"'{d}|' || s")
+    return f"list_sum(list_transform(sh, s -> {comp}))"
 
 
 SQL_ER_SCORED_EMBEDDING = (
@@ -653,20 +648,19 @@ WHERE len(list_distinct(list_intersect(s1.sh, s2.sh))) /
 )
 
 
-def _dd_sign_bucket(n_planes: int, offset: int = 0) -> str:
-    """DuckDB twin of similarity.sign_lsh_bucket over a DOUBLE[] column v
-    (generalizes the 4-plane _LSH_BUCKET_EXPR below; ``offset`` selects
-    the plane-index window, for multi-table bucketings)."""
+def _dd_plane_dot(plane: str) -> str:
+    """DuckDB twin of similarity.plane_dot over a DOUBLE[] column v;
+    ``plane`` is the SQL text of the plane's name (e.g. ``'3'``)."""
+    comp = dd_h_unit(f"{plane} || '|' || CAST(i - 1 AS VARCHAR)")
+    return f"list_sum(list_transform(generate_series(1, len(v)), i -> v[i] * {comp}))"
+
+
+def _dd_sign_bucket(n_planes: int, first_plane: int = 0) -> str:
+    """DuckDB twin of similarity.sign_lsh_bucket over a DOUBLE[] column v:
+    bit p is the sign of the dot with plane first_plane+p."""
     bits = []
     for p in range(n_planes):
-        h = (
-            f"CAST(CAST('0x' || substr(md5('{offset + p}|' || CAST(i - 1 AS VARCHAR)), 1, 15)"
-            " AS UBIGINT) AS BIGINT)"
-        )
-        dot = (
-            "list_sum(list_transform(generate_series(1, len(v)), "
-            f"i -> v[i] * (({h} / 576460752303423488.0) - 1.0)))"
-        )
+        dot = _dd_plane_dot(f"'{first_plane + p}'")
         bits.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END)")
     return "CAST(" + " + ".join(bits) + " AS BIGINT)"
 
@@ -1011,23 +1005,6 @@ FROM s
 QUALIFY rank <= 10
 """
 
-def _dd_plane_dot(p: int) -> str:
-    """DuckDB twin of operators/similarity.plane_component folded into a
-    dot product against plane p (only the SIGN is consumed downstream)."""
-    h = (
-        f"CAST(CAST('0x' || substr(md5('{p}|' || CAST(i - 1 AS VARCHAR)), 1, 15)"
-        " AS UBIGINT) AS BIGINT)"
-    )
-    return (
-        "list_sum(list_transform(generate_series(1, len(v)), "
-        f"i -> v[i] * (({h} / 576460752303423488.0) - 1.0)))"
-    )
-
-
-_LSH_BUCKET_EXPR = "CAST(" + " + ".join(
-    f"(CASE WHEN ({_dd_plane_dot(p)}) >= 0 THEN {1 << p} ELSE 0 END)" for p in range(4)
-) + " AS BIGINT)"
-
 SQL_SIMILARITY_LSH_BUCKETS = (
     r"""
 WITH e AS (
@@ -1035,20 +1012,23 @@ WITH e AS (
   FROM embeddings
 )
 SELECT vec_id, """
-    + _LSH_BUCKET_EXPR
+    + _dd_sign_bucket(4)
     + " AS bucket FROM e"
 )
 
-SQL_EVAL_BCUBED = (
-    r"""
-WITH e AS (
+# the (vec_id, cluster_id, entity) frame of B³ / Blanc / linking F1:
+# twin of driver_contract._lsh_eval_frame
+_EVAL_M = f"""e AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v,
          CAST(label AS BIGINT) AS entity
   FROM embeddings
 ),
-m AS (SELECT vec_id, """
-    + _LSH_BUCKET_EXPR
-    + r""" AS cluster_id, entity FROM e),
+m AS (SELECT vec_id, {_dd_sign_bucket(4)} AS cluster_id, entity FROM e)"""
+
+SQL_EVAL_BCUBED = (
+    "WITH "
+    + _EVAL_M
+    + r""",
 cell AS (SELECT cluster_id, entity, count(*) AS ov FROM m GROUP BY cluster_id, entity),
 csz AS (SELECT cluster_id, count(*) AS cn FROM m GROUP BY cluster_id),
 esz AS (SELECT entity, count(*) AS en FROM m GROUP BY entity),
@@ -1065,15 +1045,9 @@ FROM agg
 )
 
 SQL_EVAL_BLANC = (
-    r"""
-WITH e AS (
-  SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         CAST(label AS BIGINT) AS entity
-  FROM embeddings
-),
-m AS (SELECT vec_id, """
-    + _LSH_BUCKET_EXPR
-    + r""" AS cluster_id, entity FROM e),
+    "WITH "
+    + _EVAL_M
+    + r""",
 b2 AS (SELECT CAST(sum(n * (n - 1)) AS BIGINT) AS b2 FROM
         (SELECT count(*) AS n FROM m GROUP BY cluster_id, entity)),
 a2 AS (SELECT CAST(sum(n * (n - 1)) AS BIGINT) AS a2 FROM
@@ -1098,15 +1072,9 @@ FROM c
 )
 
 SQL_EVAL_LINKING_F1 = (
-    r"""
-WITH e AS (
-  SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         CAST(label AS BIGINT) AS entity
-  FROM embeddings
-),
-m AS (SELECT vec_id, """
-    + _LSH_BUCKET_EXPR
-    + r""" AS cluster_id, entity FROM e),
+    "WITH "
+    + _EVAL_M
+    + r""",
 cell AS (SELECT cluster_id, entity, count(*) AS n FROM m GROUP BY cluster_id, entity),
 maj AS (
   SELECT cluster_id, entity AS pred FROM (
@@ -1823,27 +1791,10 @@ FROM d
 )
 
 
-def _dd_table_bucket_bits(t: int, n_planes: int = 6) -> str:
-    """DuckDB twin of similarity.ann_topk's per-table bucket INT (sign
-    bits over planes t*n_planes .. t*n_planes+n_planes-1)."""
-    bits = []
-    for p in range(n_planes):
-        plane = t * n_planes + p
-        h = (
-            f"CAST(CAST('0x' || substr(md5('{plane}|' || CAST(i - 1 AS VARCHAR)), 1, 15)"
-            " AS UBIGINT) AS BIGINT)"
-        )
-        dot = (
-            "list_sum(list_transform(generate_series(1, len(v)), "
-            f"i -> v[i] * (({h} / 576460752303423488.0) - 1.0)))"
-        )
-        bits.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
-
-
 def _dd_table_bucket(t: int, n_planes: int = 6) -> str:
-    """Per-table bucket string: 't<t>:' + the sign-bit integer."""
-    return f"'t{t}:' || CAST({_dd_table_bucket_bits(t, n_planes)} AS VARCHAR)"
+    """Per-table bucket string of similarity.ann_candidates: 't<t>:' +
+    the sign bits over planes t*n_planes .. t*n_planes+n_planes-1."""
+    return f"'t{t}:' || CAST({_dd_sign_bucket(n_planes, t * n_planes)} AS VARCHAR)"
 
 
 def _ann_sql(
@@ -1870,7 +1821,7 @@ def _ann_sql(
         flips = ", ".join(f"({f})" for f in [0] + [1 << p for p in range(n_planes)])
         qb = "\n  UNION ALL\n".join(
             f"""  SELECT vec_id AS query_id,
-         't{t}:' || CAST(xor({_dd_table_bucket_bits(t, n_planes)}, f) AS VARCHAR) AS bucket
+         't{t}:' || CAST(xor({_dd_sign_bucket(n_planes, t * n_planes)}, f) AS VARCHAR) AS bucket
   FROM e, (VALUES {flips}) flips(f){qw}"""
             for t in range(2)
         )
@@ -2284,22 +2235,17 @@ SELECT node, community FROM l{n_iters}
 SQL_GRAPH_COMMUNITIES = _label_propagation_sql(3)
 
 
-# twin of q_similarity_jl_project (similarity.jl_project 64→8): plane
-# family "jl{j}", component = (md5_60bit('jl{j}|i') / 2^59) - 1,
-# proj_j = <v, r_j> / sqrt(8), rendered as integer micros
-SQL_SIMILARITY_JL_PROJECT = r"""
+# twin of q_similarity_jl_project (similarity.jl_project 64→8): planes
+# "jl0".."jl7" of the md5 family, proj_j = <v, r_j> / sqrt(8), rendered as
+# integer micros
+SQL_SIMILARITY_JL_PROJECT = f"""
 WITH e AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v
   FROM embeddings
 ),
 p AS (
   SELECT vec_id, s.j AS slot,
-         list_sum(list_transform(generate_series(1, len(v)),
-           i -> v[i] * ((CAST(CAST('0x' ||
-                  substr(md5('jl' || CAST(s.j AS VARCHAR) || '|' ||
-                             CAST(i - 1 AS VARCHAR)), 1, 15)
-                  AS UBIGINT) AS BIGINT) / 576460752303423488.0) - 1.0)))
-           / sqrt(8.0) AS val
+         {_dd_plane_dot("'jl' || CAST(s.j AS VARCHAR)")} / sqrt(8.0) AS val
   FROM e, unnest(generate_series(0, 7)) AS s(j)
 )
 SELECT vec_id,

@@ -24,7 +24,7 @@ inside minhash_dup_pairs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +55,6 @@ class CurationConfig:
     max_bucket_size: int = 1000
     catalog: str | None = None
     force: bool = False
-    partition_by: dict = field(default_factory=dict)
 
 
 def run_curation(

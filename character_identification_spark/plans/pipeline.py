@@ -45,7 +45,7 @@ rows, but its committed stage tables still let the next run resume.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,7 +83,6 @@ class PipelineConfig:
     cc_max_iter: int = 50
     catalog: str | None = None
     force: bool = False
-    partition_by: dict = field(default_factory=dict)  # stage -> cols
     # 60-bit md5-prefix longs are the fast name key (8-byte shuffle keys
     # through blocking/pairs/CC); the names stage ASSERTS injectivity, so
     # a birthday collision fails loudly instead of silently fusing names.
@@ -103,7 +102,7 @@ def _run_stage(store: StageStore, name: str, inputs: list[str], build, cfg: Pipe
         return store.read(name)
     t0 = time.monotonic()
     df = build()
-    store.write(df, name, tuple(cfg.partition_by.get(name, ())))
+    store.write(df, name)
     # the committed table's per-partition row counts come from the store
     # (parquet: its part-file footers, no Spark job), and the stage row
     # count is their sum — the table just written is never scanned here

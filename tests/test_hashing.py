@@ -3,14 +3,20 @@ foundation of every value-hash correctness check)."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+from pathlib import Path
+
 import duckdb
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.hashing import (
     dd_h_hex,
     dd_h_long,
+    dd_h_unit,
     h_hex,
     h_long,
+    h_unit,
 )
 from character_identification_spark.functions.minhash import (
     MINHASH_P,
@@ -37,6 +43,32 @@ def test_h_long_matches_duckdb_and_is_nonnegative(spark):
         (exp,) = duckdb.sql(f"select {dd_h_long('?')}", params=[w]).fetchone()
         assert got[w] == exp, w
         assert got[w] >= 0
+
+
+def test_h_unit_matches_duckdb_and_hashlib_bit_for_bit(spark):
+    # the md5 unit draw behind every hyperplane component and the hash
+    # embedding: Spark, DuckDB and a hashlib replication agree exactly
+    df = spark.createDataFrame([(w,) for w in WORDS], "w string")
+    got = {r["w"]: r["u"] for r in df.select("w", h_unit("w").alias("u")).collect()}
+    for w in WORDS:
+        (exp,) = duckdb.sql(f"select {dd_h_unit('?')}", params=[w]).fetchone()
+        ref = int(hashlib.md5(w.encode()).hexdigest()[:15], 16) / 2**59 - 1
+        assert got[w] == exp == ref, w
+        assert -1.0 <= got[w] < 1.0
+
+
+def test_md5_unit_scale_written_only_in_hashing():
+    # 2^59 (the 60-bit md5 prefix's half range) is the md5 unit draw's
+    # scale; a second copy of it anywhere else is a hand-written h_unit
+    pkg = Path(__file__).resolve().parents[1] / "character_identification_spark"
+    scale = re.compile(r"2\s*\*\*\s*59|576460752303423488|1\s*<<\s*59")
+    found = [
+        f"{path.relative_to(pkg).as_posix()}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if scale.search(line)
+    ]
+    assert found and all(f.startswith("functions/hashing.py:") for f in found), found
 
 
 def test_minhash_coefficients_distinct_and_in_range():

@@ -74,31 +74,6 @@ def test_score_monotone_features(spark):
     assert rows[1]["score"] > rows[3]["score"]
 
 
-def test_score_pairs_with_lcs_blend(spark):
-    """C1 wiring: the reference's LCS-ratio pair (its only string
-    similarity, util/__init__.py:57-79) as a scorer blend component."""
-    from character_identification_spark.functions.strings import _lcs_len
-
-    pairs = spark.createDataFrame(
-        [
-            (1, 2, "ross geller", "ross gellar"),
-            (3, 4, "ross geller", "completely other"),
-        ],
-        "uid1 long, uid2 long, norm_1 string, norm_2 string",
-    )
-    out = {r["uid1"]: r for r in
-           score_pairs(pairs, with_lcs=True, dedup_strings=False).collect()}
-    a, b = "ross geller", "ross gellar"
-    expect = min(_lcs_len(a, b) / len(a), _lcs_len(a, b) / len(b))
-    assert abs(out[1]["lcs_ratio"] - expect) < 1e-9
-    assert out[1]["lcs_ratio"] > out[3]["lcs_ratio"]
-    assert out[1]["is_match"] and not out[3]["is_match"]
-    # blend uses the lcs weight: score differs from the default blend
-    base = {r["uid1"]: r for r in
-            score_pairs(pairs, dedup_strings=False).collect()}
-    assert abs(out[1]["score"] - base[1]["score"]) > 1e-6
-
-
 def test_match_edges_sparse_components_equal_full_graph(spark):
     """Round-6 sparse match graph: its connected components must equal the
     full blocked-pair graph's on a corpus with same-norm duplicate groups,

@@ -68,6 +68,32 @@ def test_sign_lsh_bucket_deterministic(spark, emb):
     assert a == b
     assert all(0 <= x[1] < 64 for x in a)
 
+    # bucket bits replayed from the md5 planes: bit p is the sign of the
+    # left-fold dot with plane first_plane+p (ann_candidates' table t
+    # uses first_plane = t*n_planes, so this pins the per-table buckets)
+    import hashlib
+
+    def comp(plane, d):
+        h = int(hashlib.md5(f"{plane}|{d}".encode()).hexdigest()[:15], 16)
+        return h / float(2**59) - 1.0
+
+    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    for first in (0, 6):
+        got = dict(
+            emb.select(
+                "vec_id", sign_lsh_bucket("embedding", F.lit(8), 6, first_plane=first)
+            ).collect()
+        )
+        planes = np.array([[comp(first + p, d) for d in range(8)] for p in range(6)])
+        for i, v in vecs.items():
+            expect = 0
+            for p in range(6):
+                dp = 0.0
+                for x, c in zip(v, planes[p]):
+                    dp += float(x) * float(c)
+                expect |= (1 << p) if dp >= 0 else 0
+            assert got[i] == expect, (first, i)
+
 
 def test_ann_topk_recall(spark, emb):
     queries = emb.filter(F.col("vec_id") < 10).select(

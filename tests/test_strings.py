@@ -1,6 +1,5 @@
 """String similarity functions: known values + DuckDB parity for
-Jaro-Winkler, LCS ratios (the reference's feature, util/__init__.py:57-79
-re-derived), and normalization."""
+Jaro-Winkler, and normalization."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 from character_identification_spark.functions.strings import (
     jaro_winkler,
     jaro_winkler_udf,
-    lcs_ratio_udf,
     norm_text,
 )
 
@@ -40,13 +38,6 @@ def test_jaro_winkler_udf_batch(spark):
     rows = df.select("a", "b", jaro_winkler_udf("a", "b").alias("jw")).collect()
     for r in rows:
         assert r["jw"] == pytest.approx(jaro_winkler(r["a"], r["b"]), abs=1e-9)
-
-
-def test_lcs_ratio_known_values(spark):
-    df = spark.createDataFrame([("abcde", "ace"), ("abc", "xyz")], "a string, b string")
-    rows = {(r["a"], r["b"]): r["lr"] for r in df.select("a", "b", lcs_ratio_udf("a", "b").alias("lr")).collect()}
-    assert rows[("abcde", "ace")] == pytest.approx([3 / 5, 3 / 3])
-    assert rows[("abc", "xyz")] == pytest.approx([0.0, 0.0])
 
 
 def test_norm_text(spark):
