@@ -2,22 +2,25 @@
 
 The canonical scalable formulation (MLlib's own dataflow, re-derived
 relationally): centroids are a k×dim table that lives on the driver and
-enters the plan as LITERALS, so the assignment step is a zero-shuffle
-whole-stage-codegen projection over the corpus; the update step is one
-(cluster, slot)-keyed aggregation — map-side partial sums collapse each
-partition to ≤ k·dim rows before the exchange, so the shuffle is
-constant-size at any corpus scale. n_iters driver rounds, like
-operators/cc.py's loop discipline.
+enters the plan as one literal codebook (functions/vectors.codebook, one
+array<double> literal per centroid), so the assignment step is a
+zero-shuffle whole-stage-codegen projection over the corpus; the update
+step is one (cluster, slot)-keyed aggregation — map-side partial sums
+collapse each partition to ≤ k·dim rows before the exchange, so the
+shuffle is constant-size at any corpus scale. n_iters driver rounds,
+like operators/cc.py's loop discipline.
 
 Determinism contract (what makes the DuckDB twin value-exact):
 - init = the k rows with smallest (md5(id), id) — the same md5-exemplar
-  codebook rule as dedup.semantic_dedup / similarity.ivf_topk;
+  draw (functions/vectors.md5_exemplars) as dedup.semantic_dedup /
+  similarity.ivf_topk;
 - every working centroid is quantized to integer MICROS (round(x·1e6),
   a Spark-side round both engines reproduce — the cluster_embeddings
   precedent), so each round's assignment input is a pure integer
   function of the previous round;
 - per-centroid squared distance is rounded to micros BEFORE the argmin
-  and ties break on centroid index, so the winner is integer-determined;
+  (vectors.l2_micros) and ties break on centroid index
+  (vectors.nearest_centroids), so the winner is integer-determined;
 - a cluster that loses all members keeps its previous centroid.
 
 Reference anchor: the reference has no clustering beyond transitive
@@ -27,53 +30,48 @@ curation stack needs (SemDeDup's own step 1 is exactly this k-means).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.partitioning import topk_per_group
+from character_identification_spark.functions.vectors import (
+    MICROS,
+    centroid_dists,
+    l2_micros,
+    md5_exemplars,
+    nearest_centroids,
+)
 from character_identification_spark.session import materialize
-
-MICROS = 1_000_000.0
 
 
 def _best_centroid(vec, centroids: list[list[float]]):
-    """(dist_micros, cluster) argmin against a literal centroid table.
-
-    The centroids enter as ONE literal array<array<double>> consumed by
-    higher-order functions, so the generated code contains a single
-    distance-fold lambda regardless of k — an array_sort over k copies
-    of the fold was measured at ~19 s of codegen for k·n_blocks = 128
-    at PQ scale vs ~2 s for this shape. Values are identical: same
-    sequential fold per centroid, same micros rounding, argmin by
-    (dist_micros, index). The two-parameter transform lambda receives
-    (element, index) from Spark — the index IS the cluster id here.
-    """
-    cents = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-    dists = F.transform(
-        cents,
-        lambda c: F.round(
-            F.aggregate(
-                F.zip_with(vec, c, lambda a, y: (a - y) * (a - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            * MICROS
-        ).cast("long"),
-    )
-    pairs = F.transform(
-        dists,
-        lambda d, i: F.struct(d.alias("dist_micros"), i.alias("cluster")),
-    )
-    return F.element_at(F.array_sort(pairs), 1)
+    """struct(dist, id): the (dist micros, index) argmin — the codebook
+    index IS the cluster id."""
+    return F.element_at(nearest_centroids(vec, centroids, l2_micros), 1)
 
 
 def _assign(base: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
     """Argmin-by-(dist_micros, cluster) — pure projection, no shuffle,
     no Python."""
     best = _best_centroid(F.col(vec_col), centroids)
-    return base.withColumn("cluster", best["cluster"]).withColumn(
-        "dist_micros", best["dist_micros"]
+    return base.withColumn("cluster", best["id"]).withColumn(
+        "dist_micros", best["dist"]
     )
+
+
+def _micros(vec: Column) -> Column:
+    return F.transform(vec, lambda x: F.round(x * MICROS).cast("long"))
+
+
+def _from_micros(m: list[int]) -> list[float]:
+    return [x / MICROS for x in m]
+
+
+def _exemplars(base: DataFrame, n: int) -> list[list[float]]:
+    """The n md5-exemplar vectors of ``base`` (_id, _v), micros-quantized
+    in Spark so the oracle's round() is the same round()."""
+    rows = md5_exemplars(base, "_id", n, _micros(F.col("_v")))
+    return [_from_micros(r[0]) for r in rows]
 
 
 def kmeans_fit_predict(
@@ -92,24 +90,12 @@ def kmeans_fit_predict(
     base = emb.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    # Init: k exemplars by (md5(id), id); micros-quantized in Spark so
-    # the oracle's round() is the same round().
-    init_rows = (
-        base.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-        .limit(k)
-        .select(
-            F.transform(
-                F.col("_v"), lambda x: F.round(x * MICROS).cast("long")
-            ).alias("m")
-        )
-        .collect()
-    )
-    if len(init_rows) < k:
+    centroids = _exemplars(base, k)
+    if len(centroids) < k:
         raise ValueError(
-            f"corpus has fewer than k={k} rows ({len(init_rows)}) — "
+            f"corpus has fewer than k={k} rows ({len(centroids)}) — "
             "cannot seed the codebook"
         )
-    centroids = [[m / MICROS for m in r["m"]] for r in init_rows]
     dim = len(centroids[0])
 
     for _ in range(n_iters):
@@ -163,25 +149,18 @@ def kcenter_fit_predict(
     base = emb.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    quant = F.transform(F.col("_v"), lambda x: F.round(x * MICROS).cast("long"))
-    first = (
-        base.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-        .limit(1)
-        .select(quant.alias("m"))
-        .collect()
-    )
-    if not first:
+    cents = _exemplars(base, 1)
+    if not cents:
         raise ValueError("corpus is empty — cannot seed k-center")
-    cents = [[m / MICROS for m in first[0]["m"]]]
     for _ in range(1, k):
         nxt = (
             _assign(base, "_v", cents)
             .orderBy(F.desc("dist_micros"), F.asc("_id"))
             .limit(1)
-            .select(quant.alias("m"))
+            .select(_micros(F.col("_v")))
             .collect()
         )
-        cents.append([m / MICROS for m in nxt[0]["m"]])
+        cents.append(_from_micros(nxt[0][0]))
     return _assign(base, "_v", cents).select(
         F.col("_id").alias(id_col), "cluster", "dist_micros"
     )
@@ -237,37 +216,25 @@ def _pq_assigned(base: DataFrame, centroids, d_b: int) -> DataFrame:
     for b in range(len(centroids)):
         sub = F.slice(F.col("_v"), b * d_b + 1, d_b)
         best = _best_centroid(sub, centroids[b])
-        cols.append(best["cluster"].alias(f"c{b}"))
-        cols.append(best["dist_micros"].alias(f"d{b}"))
+        cols.append(best["id"].alias(f"c{b}"))
+        cols.append(best["dist"].alias(f"d{b}"))
     return base.select(*cols)
 
 
 def _pq_train(base: DataFrame, n_blocks: int, k: int, n_iters: int):
     """Shared PQ codebook trainer → (centroids[b][c] sub-vectors, d_b)."""
-    init_rows = (
-        base.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-        .limit(k)
-        .select(
-            F.transform(
-                F.col("_v"), lambda x: F.round(x * MICROS).cast("long")
-            ).alias("m")
-        )
-        .collect()
-    )
-    if len(init_rows) < k:
+    init = _exemplars(base, k)
+    if len(init) < k:
         raise ValueError(
-            f"corpus has fewer than k={k} rows ({len(init_rows)}) — "
+            f"corpus has fewer than k={k} rows ({len(init)}) — "
             "cannot seed the PQ codebooks"
         )
-    dim = len(init_rows[0]["m"])
+    dim = len(init[0])
     if dim % n_blocks:
         raise ValueError(f"dim {dim} not divisible by n_blocks {n_blocks}")
     d_b = dim // n_blocks
     # centroids[b][c] = d_b-dim sub-vector of exemplar c
-    centroids = [
-        [[m / MICROS for m in r["m"][b * d_b : (b + 1) * d_b]] for r in init_rows]
-        for b in range(n_blocks)
-    ]
+    centroids = [[c[b * d_b : (b + 1) * d_b] for c in init] for b in range(n_blocks)]
 
     for _ in range(n_iters):
         # materialize cuts projection collapse: without it Catalyst
@@ -363,27 +330,10 @@ def pq_topk(
 def _adc_tables(q: DataFrame, centroids, d_b: int) -> DataFrame:
     """(_qid, tabs): per-query per-block integer distance tables against
     the PQ codebooks — tabs[b][c] = micros-rounded ||q_b − centroid||²."""
-
-    # Closure factory, NOT `lambda c, sub=sub`: a two-parameter lambda
-    # would receive (element, array_index) and bind the index as `sub`
-    # (CLAUDE.md invariant).
-    def _tab(sub):
-        return lambda c: F.round(
-            F.aggregate(
-                F.zip_with(sub, c, lambda a, y: (a - y) * (a - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            * MICROS
-        ).cast("long")
-
-    tab_cols = []
-    for b in range(len(centroids)):
-        sub = F.slice(F.col("_qv"), b * d_b + 1, d_b)
-        cents = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids[b]]
-        )
-        tab_cols.append(F.transform(cents, _tab(sub)))
+    tab_cols = [
+        centroid_dists(F.slice(F.col("_qv"), b * d_b + 1, d_b), cents, l2_micros)
+        for b, cents in enumerate(centroids)
+    ]
     return q.select(F.col("_qid"), F.array(*tab_cols).alias("tabs"))
 
 
@@ -439,23 +389,13 @@ def ivfpq_topk(
     base = emb.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    coarse_rows = (
-        base.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-        .limit(n_centroids)
-        .select(
-            F.transform(
-                F.col("_v"), lambda x: F.round(x * MICROS).cast("long")
-            ).alias("m")
-        )
-        .collect()
-    )
-    coarse = [[m / MICROS for m in r["m"]] for r in coarse_rows]
+    coarse = _exemplars(base, n_centroids)
     centroids, d_b = _pq_train(base, n_blocks, k_codebook, n_iters)
 
     # index build: cell + codes in one literal-centroid projection
     enc = _pq_assigned(base, centroids, d_b).select(
         F.col("_id"),
-        _best_centroid(F.col("_v"), coarse)["cluster"].alias("cell"),
+        _best_centroid(F.col("_v"), coarse)["id"].alias("cell"),
         F.array(*[F.col(f"c{b}") for b in range(n_blocks)]).alias("codes"),
     )
 
@@ -464,26 +404,10 @@ def ivfpq_topk(
         F.col(vec_col).cast("array<double>").alias("_qv"),
     )
     # probe set: nprobe nearest coarse cells by (dist_micros, cell)
-    ccents = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in coarse])
-    cdists = F.transform(
-        ccents,
-        lambda c, i: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(F.col("_qv"), c, lambda a, y: (a - y) * (a - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                * MICROS
-            )
-            .cast("long")
-            .alias("dist_micros"),
-            i.alias("cell"),
-        ),
-    )
+    ranked = nearest_centroids("_qv", coarse, l2_micros)
     probes = q.select(
-        "_qid", F.explode(F.slice(F.array_sort(cdists), 1, nprobe)).alias("_p")
-    ).select("_qid", F.col("_p.cell").alias("cell"))
+        "_qid", F.explode(F.slice(ranked, 1, nprobe)).alias("_p")
+    ).select("_qid", F.col("_p.id").alias("cell"))
     qside = _adc_tables(q, centroids, d_b).join(probes, "_qid")
 
     joined = enc.join(F.broadcast(qside), "cell").where(F.col("_id") != F.col("_qid"))

@@ -29,7 +29,11 @@ from pyspark.sql import functions as F
 from character_identification_spark.functions.hashing import h_long
 from character_identification_spark.functions.minhash import minhash_bands
 from character_identification_spark.functions.partitioning import fan_out
-from character_identification_spark.functions.vectors import cosine_sim
+from character_identification_spark.functions.vectors import (
+    cosine_ranked,
+    cosine_sim,
+    md5_exemplars,
+)
 from character_identification_spark.operators.blocking import cap_block_sizes
 from character_identification_spark.session import materialize
 
@@ -599,10 +603,12 @@ def semantic_dedup(
     → (vec_id, cid, keep)  — every input row, keep=false for semantic dups.
 
     Dataflow (scale path): the codebook is the same md5-exemplar
-    construction as ivf_topk — n_centroids deterministic rows collected
-    once and inlined as LITERALS, so cluster assignment is a zero-shuffle
-    JVM projection (array_sort argmax over per-centroid cosine structs).
-    The only shuffle is the within-cluster self-join on cid. Per-cluster
+    construction as ivf_topk — n_centroids deterministic rows
+    (vectors.md5_exemplars) entering the plan as one literal per
+    centroid, so cluster assignment is a zero-shuffle JVM projection
+    (vectors.nearest_centroids: one HOF argmax by (−cosine, cid), a
+    zero-norm side last). An empty corpus gives zero rows. The only
+    shuffle is the within-cluster self-join on cid. Per-cluster
     cost is (N/n_centroids)² — at real scale n_centroids grows with the
     corpus (SemDeDup uses ~100k clusters for LAION-scale) so the
     quadratic term stays bounded; the all-pairs cross product never
@@ -610,24 +616,11 @@ def semantic_dedup(
     identical codebook, assignment, and drop set value-for-value.
     """
     base = emb.select(F.col(id_col), F.col(vec_col))
-    cent_rows = (
-        base.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_centroids)
-        .collect()
-    )
-    arr = F.array(
-        *[
-            F.struct(
-                (-cosine_sim(
-                    vec_col, F.array(*[F.lit(x) for x in r[vec_col]])
-                )).alias("negs"),
-                F.lit(r[id_col]).alias("cid"),
-            )
-            for r in cent_rows
-        ]
+    ranked = cosine_ranked(
+        vec_col, md5_exemplars(base, id_col, n_centroids, id_col, vec_col)
     )
     assigned = base.select(
-        F.col(id_col), F.col(vec_col), F.element_at(F.array_sort(arr), 1)["cid"].alias("cid")
+        F.col(id_col), F.col(vec_col), F.element_at(ranked, 1)["id"].alias("cid")
     )
     a = assigned.select("cid", F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"))
     b = assigned.select("cid", F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"))

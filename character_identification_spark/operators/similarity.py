@@ -30,7 +30,11 @@ from pyspark.sql import functions as F
 
 from character_identification_spark.functions.hashing import h_long, h_unit
 from character_identification_spark.functions.partitioning import topk_per_group
-from character_identification_spark.functions.vectors import cosine_sim
+from character_identification_spark.functions.vectors import (
+    cosine_ranked,
+    cosine_sim,
+    md5_exemplars,
+)
 
 
 def planes_for(n_rows: int, target_bucket_size: int = 1000) -> int:
@@ -145,40 +149,20 @@ def ivf_topk(
     expectation; the corpus-sized cross product never happens.
 
     ZERO-SHUFFLE list build: the codebook is n_centroids deterministic
-    rows, so it is collected once (TakeOrderedAndProject — per-partition
-    top-n + tiny driver merge) and inlined as LITERAL vectors; each
-    corpus/query row computes its nearest centroid(s) with JVM array ops
-    (array_sort over per-centroid cosine structs) — no crossJoin row
-    inflation and no rank-window Exchange. The old formulation shuffled
-    the corpus n_centroids× through a partitionBy(id) window just to pick
-    one argmax per row."""
-    # global top-n by hash = TakeOrderedAndProject, then collect the tiny
-    # deterministic codebook (n_centroids rows) to inline as literals
-    cent_rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .orderBy(F.md5(F.col("cid").cast("string")), F.col("cid"))
-        .limit(n_centroids)
-        .collect()
+    rows (vectors.md5_exemplars — one TakeOrderedAndProject, collected
+    once) and enters the plan as one literal per centroid; each
+    corpus/query row ranks the codebook with one higher-order function
+    over it (vectors.nearest_centroids by (−cosine, cid), a zero-norm
+    side last) — no crossJoin row inflation and no rank-window Exchange.
+    An empty corpus gives an empty codebook and zero rows."""
+    ranked = cosine_ranked(
+        vec_col, md5_exemplars(corpus, id_col, n_centroids, id_col, vec_col)
     )
 
     def nearest(df, idc, topn):
-        # struct(-sim, cid) sorted ascending == (sim desc, cid asc) — the
-        # exact tie order of the previous window formulation
-        arr = F.array(
-            *[
-                F.struct(
-                    (-cosine_sim(
-                        vec_col, F.array(*[F.lit(x) for x in r["cvec"]])
-                    )).alias("negs"),
-                    F.lit(r["cid"]).alias("cid"),
-                )
-                for r in cent_rows
-            ]
-        )
-        top = F.slice(F.array_sort(arr), 1, topn)
         return df.select(
-            F.col(idc), F.col(vec_col), F.explode(top).alias("_t")
-        ).select(idc, vec_col, F.col("_t.cid").alias("cid"))
+            F.col(idc), F.col(vec_col), F.explode(F.slice(ranked, 1, topn)).alias("_t")
+        ).select(idc, vec_col, F.col("_t.id").alias("cid"))
 
     lists = nearest(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),

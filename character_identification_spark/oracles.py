@@ -985,17 +985,74 @@ SELECT dup_group, keep_doc_id, quality, n_members FROM (
 # Similarity
 # --------------------------------------------------------------------------
 
-SQL_SIMILARITY_TOPK = r"""
+def _dd_cos(a: str, b: str) -> str:
+    """Twin of vectors.cosine_sim: NULL when either side has zero norm
+    (DuckDB's division by zero)."""
+    return (
+        f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * "
+        f"sqrt(list_dot_product({b}, {b})))"
+    )
+
+
+# --- the md5-exemplar codebook (twins of functions/vectors) ---------------
+# Every codebook twin reads CTE e(vec_id, v DOUBLE[]).
+
+
+def _dd_exemplars(n: int) -> str:
+    """Twin of vectors.md5_exemplars: the n rows of ``e`` with the lowest
+    (md5(vec_id), vec_id) as (vec_id, v, r), r = the 0-based draw rank,
+    which is the Spark codebook index."""
+    return f"""(
+    SELECT vec_id, v,
+           row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
+             AS r
+    FROM e QUALIFY r < {n}
+  )"""
+
+
+def _dd_exemplar_micros(n: int, idx: str) -> str:
+    """The n exemplars micros-quantized, one (idx, slot, m) row per
+    component: the round() the Spark side applies before it collects."""
+    return f"""
+  SELECT r AS {idx}, t.i - 1 AS slot, CAST(round(v[t.i] * 1000000) AS BIGINT) AS m
+  FROM {_dd_exemplars(n)}, unnest(generate_series(1, len(v))) AS t(i)"""
+
+
+def _dd_l2_micros(val: str, m: str) -> str:
+    """Twin of vectors.l2_micros over component rows (``val`` against the
+    centroid's micros ``m``): an aggregate, grouped by (row, centroid)."""
+    diff = f"({val} - {m} / 1000000.0)"
+    return f"CAST(round(sum({diff} * {diff}) * 1000000) AS BIGINT)"
+
+
+def _dd_cosine_nearest(topn: int, where: str = "") -> str:
+    """Twin of vectors.cosine_ranked: each ``e`` row's topn nearest rows of
+    ``cents`` (cid, cvec) by (cos DESC, cid), a NULL cos (zero norm)
+    last, as (vec_id, v, cid)."""
+    return f"""
+  SELECT vec_id, v, cid FROM (
+    SELECT e.vec_id, e.v, c.cid,
+           row_number() OVER (
+             PARTITION BY e.vec_id
+             ORDER BY {_dd_cos("e.v", "c.cvec")} DESC NULLS LAST, c.cid
+           ) AS crk
+    FROM e CROSS JOIN cents c{where}
+  ) WHERE crk <= {topn}"""
+
+
+_DD_COSINE_CENTS = f"""cents AS (
+  SELECT vec_id AS cid, v AS cvec FROM {_dd_exemplars(16)}
+)"""
+
+
+SQL_SIMILARITY_TOPK = f"""
 WITH e AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v
   FROM embeddings
 ),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
 s AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_dot_product(e.v, q.qv) /
-           (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv)))
-           AS cos_sim
+  SELECT q.query_id, e.vec_id AS neighbor_id, {_dd_cos("e.v", "q.qv")} AS cos_sim
   FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id
 )
 SELECT query_id, neighbor_id, round(cos_sim, 6) AS cos_sim,
@@ -1121,45 +1178,21 @@ SELECT * FROM rows_ UNION ALL SELECT * FROM macro
 
 # twin of ivf_topk(n_centroids=16, nprobe=4, k=10): md5-exemplar codebook,
 # nearest-centroid inverted lists, nprobe probes, exact rerank
-SQL_SIMILARITY_IVF = r"""
+SQL_SIMILARITY_IVF = f"""
 WITH e AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v
   FROM embeddings
 ),
-cents AS (
-  SELECT vec_id AS cid, v AS cvec FROM e
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
-),
+{_DD_COSINE_CENTS},
 lists AS (
-  SELECT vec_id AS neighbor_id, v AS cv, cid FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.cvec) /
-                      (sqrt(list_dot_product(e.v, e.v)) *
-                       sqrt(list_dot_product(c.cvec, c.cvec))) DESC, c.cid
-           ) AS crk
-    FROM e CROSS JOIN cents c
-  ) WHERE crk = 1
+  SELECT vec_id AS neighbor_id, v AS cv, cid FROM ({_dd_cosine_nearest(1)})
 ),
 probes AS (
-  SELECT vec_id AS query_id, v AS qv, cid FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.cvec) /
-                      (sqrt(list_dot_product(e.v, e.v)) *
-                       sqrt(list_dot_product(c.cvec, c.cvec))) DESC, c.cid
-           ) AS crk
-    FROM e CROSS JOIN cents c
-    WHERE e.vec_id < 8
-  ) WHERE crk <= 4
+  SELECT vec_id AS query_id, v AS qv, cid
+  FROM ({_dd_cosine_nearest(4, " WHERE e.vec_id < 8")})
 ),
 s AS (
-  SELECT p.query_id, l.neighbor_id,
-         list_dot_product(l.cv, p.qv) /
-           (sqrt(list_dot_product(l.cv, l.cv)) * sqrt(list_dot_product(p.qv, p.qv)))
-           AS cos_sim
+  SELECT p.query_id, l.neighbor_id, {_dd_cos("l.cv", "p.qv")} AS cos_sim
   FROM lists l JOIN probes p USING (cid)
   WHERE l.neighbor_id <> p.query_id
 )
@@ -1899,33 +1932,17 @@ SQL_SIMILARITY_ANN_MULTIPROBE = _ann_sql(10, 4, multiprobe=True, cap=32)
 # exact twin of dedup.semantic_dedup(n_centroids=16, tau=0.35): same
 # md5-exemplar codebook as similarity_ivf, nearest-centroid assignment,
 # drop any vector with a lower-id cluster-mate above tau
-SQL_DEDUP_SEMANTIC = r"""
+SQL_DEDUP_SEMANTIC = f"""
 WITH e AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(embedding AS DOUBLE[]) AS v
   FROM embeddings
 ),
-cents AS (
-  SELECT vec_id AS cid, v AS cvec FROM e
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
-),
-assign AS (
-  SELECT vec_id, v, cid FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.cvec) /
-                      (sqrt(list_dot_product(e.v, e.v)) *
-                       sqrt(list_dot_product(c.cvec, c.cvec))) DESC, c.cid
-           ) AS crk
-    FROM e CROSS JOIN cents c
-  ) WHERE crk = 1
-),
+{_DD_COSINE_CENTS},
+assign AS ({_dd_cosine_nearest(1)}),
 drops AS (
   SELECT DISTINCT a.vec_id
   FROM assign a JOIN assign b ON a.cid = b.cid AND b.vec_id < a.vec_id
-  WHERE list_dot_product(a.v, b.v) /
-          (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-        > 0.35
+  WHERE {_dd_cos("a.v", "b.v")} > 0.35
 )
 SELECT a.vec_id, a.cid, (d.vec_id IS NULL) AS keep
 FROM assign a LEFT JOIN drops d ON a.vec_id = d.vec_id
@@ -2271,10 +2288,7 @@ sem AS (
   SELECT vec_id AS doc_id,
          row_number() OVER (ORDER BY cos_sim DESC, vec_id) AS rank
   FROM (
-    SELECT e.vec_id,
-           list_dot_product(e.v, qv.qv) /
-             (sqrt(list_dot_product(e.v, e.v)) *
-              sqrt(list_dot_product(qv.qv, qv.qv))) AS cos_sim
+    SELECT e.vec_id, {_dd_cos("e.v", "qv.qv")} AS cos_sim
     FROM e CROSS JOIN qv WHERE e.vec_id <> 0
   )
   QUALIFY rank <= 15
@@ -2311,10 +2325,7 @@ def _kmeans_sql(k: int, n_iters: int, dim: int) -> str:
     SELECT d.vec_id, d.c, d.dist_m,
            row_number() OVER (PARTITION BY d.vec_id ORDER BY d.dist_m, d.c) AS rn
     FROM (
-      SELECT es.vec_id, cp.c,
-             CAST(round(sum((es.val - cp.m / 1000000.0) *
-                            (es.val - cp.m / 1000000.0)) * 1000000)
-                  AS BIGINT) AS dist_m
+      SELECT es.vec_id, cp.c, {_dd_l2_micros("es.val", "cp.m")} AS dist_m
       FROM es JOIN {prev} cp ON es.slot = cp.slot
       GROUP BY es.vec_id, cp.c
     ) d"""
@@ -2350,15 +2361,7 @@ es AS (
   SELECT vec_id, t.i - 1 AS slot, v[t.i] AS val
   FROM e, unnest(generate_series(1, len(v))) AS t(i)
 ),
-init AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-           AS c, v
-  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}
-),
-c0 AS (
-  SELECT c, t.i - 1 AS slot, CAST(round(v[t.i] * 1000000) AS BIGINT) AS m
-  FROM init, unnest(generate_series(1, len(v))) AS t(i)
-),
+c0 AS ({_dd_exemplar_micros(k, "c")}),
 {body}
 SELECT vec_id, CAST(c AS BIGINT) AS cluster, dist_m AS dist_micros
 FROM ({_argmin(f"c{n_iters}")}) WHERE rn = 1
@@ -2379,10 +2382,7 @@ def _kcenter_sql(k: int) -> str:
         rounds.append(
             f"""d{t} AS (
   SELECT vec_id, min(dm) AS dmin FROM (
-    SELECT es.vec_id, s.r,
-           CAST(round(sum((es.val - s.m / 1000000.0) *
-                          (es.val - s.m / 1000000.0)) * 1000000)
-                AS BIGINT) AS dm
+    SELECT es.vec_id, s.r, {_dd_l2_micros("es.val", "s.m")} AS dm
     FROM es JOIN s{t - 1} s ON es.slot = s.slot
     GROUP BY es.vec_id, s.r
   ) GROUP BY vec_id
@@ -2405,21 +2405,12 @@ es AS (
   SELECT vec_id, t.i - 1 AS slot, v[t.i] AS val
   FROM e, unnest(generate_series(1, len(v))) AS t(i)
 ),
-s0 AS (
-  SELECT 0 AS r, t.i - 1 AS slot, CAST(round(v[t.i] * 1000000) AS BIGINT) AS m
-  FROM (SELECT v FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1),
-       unnest(generate_series(1, len(v))) AS t(i)
-),
+s0 AS ({_dd_exemplar_micros(1, "r")}),
 {body}
 SELECT vec_id, CAST(r AS INTEGER) AS cluster, dm AS dist_micros FROM (
-  SELECT es.vec_id, s.r,
-         CAST(round(sum((es.val - s.m / 1000000.0) *
-                        (es.val - s.m / 1000000.0)) * 1000000)
-              AS BIGINT) AS dm,
+  SELECT es.vec_id, s.r, {_dd_l2_micros("es.val", "s.m")} AS dm,
          row_number() OVER (PARTITION BY es.vec_id
-                            ORDER BY CAST(round(sum((es.val - s.m / 1000000.0) *
-                                                    (es.val - s.m / 1000000.0))
-                                          * 1000000) AS BIGINT), s.r) AS rn
+                            ORDER BY {_dd_l2_micros("es.val", "s.m")}, s.r) AS rn
   FROM es JOIN s{k - 1} s ON es.slot = s.slot
   GROUP BY es.vec_id, s.r
 ) WHERE rn = 1
@@ -2442,10 +2433,7 @@ def _pq_with(n_blocks: int, k: int, n_iters: int, dim: int):
            row_number() OVER (PARTITION BY d.vec_id, d.b
                               ORDER BY d.dist_m, d.c) AS rn
     FROM (
-      SELECT esb.vec_id, esb.b, cp.c,
-             CAST(round(sum((esb.val - cp.m / 1000000.0) *
-                            (esb.val - cp.m / 1000000.0)) * 1000000)
-                  AS BIGINT) AS dist_m
+      SELECT esb.vec_id, esb.b, cp.c, {_dd_l2_micros("esb.val", "cp.m")} AS dist_m
       FROM esb JOIN {prev} cp
         ON esb.b = cp.b AND esb.slot_in = cp.slot_in
       GROUP BY esb.vec_id, esb.b, cp.c
@@ -2484,15 +2472,9 @@ esb AS (
          v[t.i] AS val
   FROM e, unnest(generate_series(1, len(v))) AS t(i)
 ),
-init AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-           AS c, v
-  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}
-),
 c0 AS (
-  SELECT c, (t.i - 1) // {d_b} AS b, (t.i - 1) % {d_b} AS slot_in,
-         CAST(round(v[t.i] * 1000000) AS BIGINT) AS m
-  FROM init, unnest(generate_series(1, len(v))) AS t(i)
+  SELECT c, slot // {d_b} AS b, slot % {d_b} AS slot_in, m
+  FROM ({_dd_exemplar_micros(k, "c")})
 ),
 {body}"""
     return prefix, _argmin
@@ -2509,13 +2491,15 @@ GROUP BY vec_id
 """
 
 
-def _pq_topk_sql(
-    n_blocks: int, k: int, n_iters: int, dim: int, n_queries: int, topk: int
+def _pq_search(
+    n_blocks: int, k: int, n_iters: int, dim: int, n_queries: int, topk: int,
+    candidates: str,
 ) -> str:
-    """Twin of cluster.pq_topk: ADC search — query-side per-block
-    distance tables against the final codebooks, corpus scored through
-    its codes only (exact integer lookup sums), per-query
-    (approx asc, neighbor) rank."""
+    """The ADC search shared by the pq_topk and ivfpq_topk twins: corpus
+    codes (enc), query-side per-block distance tables against the final
+    codebooks (tabs), integer lookup sums (approx) over the
+    ``candidates`` CTEs' cand(query_id, neighbor_id) pairs, and the
+    per-query (approx asc, neighbor) rank."""
     prefix, argmin = _pq_with(n_blocks, k, n_iters, dim)
     return f"""{prefix},
 enc AS (
@@ -2526,19 +2510,17 @@ qs AS (
   WHERE vec_id < {n_queries}
 ),
 tabs AS (
-  SELECT qs.query_id, cp.b, cp.c,
-         CAST(round(sum((qs.val - cp.m / 1000000.0) *
-                        (qs.val - cp.m / 1000000.0)) * 1000000)
-              AS BIGINT) AS dm
+  SELECT qs.query_id, cp.b, cp.c, {_dd_l2_micros("qs.val", "cp.m")} AS dm
   FROM qs JOIN c{n_iters} cp
     ON qs.b = cp.b AND qs.slot_in = cp.slot_in
   GROUP BY qs.query_id, cp.b, cp.c
-),
+),{candidates}
 approx AS (
   SELECT t.query_id, e.vec_id AS neighbor_id,
          CAST(sum(t.dm) AS BIGINT) AS approx_micros
-  FROM enc e JOIN tabs t ON e.b = t.b AND e.code = t.c
-  WHERE e.vec_id <> t.query_id
+  FROM enc e
+  JOIN cand cd ON cd.neighbor_id = e.vec_id
+  JOIN tabs t ON e.b = t.b AND e.code = t.c AND t.query_id = cd.query_id
   GROUP BY t.query_id, e.vec_id
 )
 SELECT query_id, neighbor_id, approx_micros,
@@ -2548,6 +2530,19 @@ SELECT query_id, neighbor_id, approx_micros,
 FROM approx
 QUALIFY rank <= {topk}
 """
+
+
+def _pq_topk_sql(
+    n_blocks: int, k: int, n_iters: int, dim: int, n_queries: int, topk: int
+) -> str:
+    """Twin of cluster.pq_topk: ADC search over the whole corpus, scored
+    through its codes only (exact integer lookup sums)."""
+    every_pair = """
+cand AS (
+  SELECT q.query_id, e.vec_id AS neighbor_id
+  FROM (SELECT DISTINCT query_id FROM qs) q JOIN e ON e.vec_id <> q.query_id
+),"""
+    return _pq_search(n_blocks, k, n_iters, dim, n_queries, topk, every_pair)
 
 
 def _ivfpq_topk_sql(
@@ -2567,25 +2562,10 @@ def _ivfpq_topk_sql(
     candidates = corpus rows in a probed cell; scoring = the pq_topk
     integer table-lookup sums restricted to candidates."""
     d_b = dim // n_blocks
-    prefix, argmin = _pq_with(n_blocks, k, n_iters, dim)
-    return f"""{prefix},
-enc AS (
-  SELECT vec_id, b, c AS code FROM ({argmin(f"c{n_iters}")}) WHERE rn = 1
-),
-coarse_init AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-           AS cell, v
-  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-),
-ccents AS (
-  SELECT cell, t.i - 1 AS slot, CAST(round(v[t.i] * 1000000) AS BIGINT) AS m
-  FROM coarse_init, unnest(generate_series(1, len(v))) AS t(i)
-),
+    candidates = f"""
+ccents AS ({_dd_exemplar_micros(n_centroids, "cell")}),
 cdist AS (
-  SELECT es.vec_id, c.cell,
-         CAST(round(sum((es.val - c.m / 1000000.0) *
-                        (es.val - c.m / 1000000.0)) * 1000000)
-              AS BIGINT) AS dm
+  SELECT es.vec_id, c.cell, {_dd_l2_micros("es.val", "c.m")} AS dm
   FROM (SELECT vec_id, b * {d_b} + slot_in AS slot, val FROM esb) es
   JOIN ccents c ON es.slot = c.slot
   GROUP BY es.vec_id, c.cell
@@ -2602,39 +2582,12 @@ probes AS (
            row_number() OVER (PARTITION BY vec_id ORDER BY dm, cell) AS rn
     FROM cdist WHERE vec_id < {n_queries}) WHERE rn <= {nprobe}
 ),
-qs AS (
-  SELECT vec_id AS query_id, b, slot_in, val FROM esb
-  WHERE vec_id < {n_queries}
-),
-tabs AS (
-  SELECT qs.query_id, cp.b, cp.c,
-         CAST(round(sum((qs.val - cp.m / 1000000.0) *
-                        (qs.val - cp.m / 1000000.0)) * 1000000)
-              AS BIGINT) AS dm
-  FROM qs JOIN c{n_iters} cp
-    ON qs.b = cp.b AND qs.slot_in = cp.slot_in
-  GROUP BY qs.query_id, cp.b, cp.c
-),
 cand AS (
   SELECT p.query_id, a.vec_id AS neighbor_id
   FROM probes p JOIN cassign a ON p.cell = a.cell
   WHERE a.vec_id <> p.query_id
-),
-approx AS (
-  SELECT t.query_id, e.vec_id AS neighbor_id,
-         CAST(sum(t.dm) AS BIGINT) AS approx_micros
-  FROM enc e
-  JOIN cand cd ON cd.neighbor_id = e.vec_id
-  JOIN tabs t ON e.b = t.b AND e.code = t.c AND t.query_id = cd.query_id
-  GROUP BY t.query_id, e.vec_id
-)
-SELECT query_id, neighbor_id, approx_micros,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY approx_micros, neighbor_id)
-            AS INTEGER) AS rank
-FROM approx
-QUALIFY rank <= {topk}
-"""
+),"""
+    return _pq_search(n_blocks, k, n_iters, dim, n_queries, topk, candidates)
 
 
 SQL_CLUSTER_PQ_CODES = _pq_codes_sql(8, 16, 2, 64)

@@ -36,6 +36,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from character_identification_spark.functions.lexicon import label_gender
+from character_identification_spark.functions.vectors import dot, vec_lit
 
 #: fixed feature order — models/coref_params.py weights index into this
 FEATURES = (
@@ -203,13 +204,6 @@ def candidate_array(
     )
 
 
-def _dot(fs: Column, weights: list[float]) -> Column:
-    w = F.array(*[F.lit(float(x)) for x in weights])
-    return F.aggregate(
-        F.zip_with(fs, w, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
 def learned_members(cands_col: str, weights: list[float], tau: float) -> Column:
     """M5 multi-label membership gate for PLURAL mentions: the refs of
     ALL real (non-pseudo) candidates whose sigmoid clears τ — the
@@ -218,11 +212,12 @@ def learned_members(cands_col: str, weights: list[float], tau: float) -> Column:
     a deterministic logistic over the same candidate features the
     antecedent rankers use. Unlike learned_best there is no argmax: a
     plural mention refers to a label SET."""
+    w = vec_lit(weights)
     passing = F.filter(
         F.col(cands_col),
         lambda c: (c["pseudo"] == 0.0)
         & (
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-_dot(c["fs"], weights))))
+            (F.lit(1.0) / (F.lit(1.0) + F.exp(-dot(c["fs"], w))))
             >= F.lit(float(tau))
         ),
     )
@@ -236,11 +231,12 @@ def learned_best(cands_col: str, weights: list[float], tau: float) -> Column:
     break to the lexicographically first label (array_sort over
     (−score, ref)). ``pseudo`` = 1.0 means the pick is an unmatched-name
     surface: cluster on it, but emit no character prediction."""
+    w = vec_lit(weights)
     ranked = F.array_sort(
         F.transform(
             F.col(cands_col),
             lambda c: F.struct(
-                (-_dot(c["fs"], weights)).alias("negs"),
+                (-dot(c["fs"], w)).alias("negs"),
                 c["ref"].alias("ref"),
                 c["pseudo"].alias("pseudo"),
             ),

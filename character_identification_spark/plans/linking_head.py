@@ -24,10 +24,14 @@ engine's counterpart, under the no-RNG discipline:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from character_identification_spark.functions.vectors import hash_embedding
+from character_identification_spark.functions.vectors import (
+    dot,
+    hash_embedding,
+    vec_lit,
+)
 
 #: mention-kind slots for the kind-fraction block (fixed order; 'nom'
 #: added in round 4 — without it nominal members were invisible to every
@@ -70,13 +74,6 @@ def cluster_features(members: DataFrame) -> DataFrame:
     )
 
 
-def _dot(fs: Column, weights: list[float]) -> Column:
-    w = F.array(*[F.lit(float(x)) for x in weights])
-    return F.aggregate(
-        F.zip_with(fs, w, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
 def predict_cluster_labels(
     features: DataFrame, weights: dict[str, list[float]]
 ) -> DataFrame:
@@ -87,7 +84,7 @@ def predict_cluster_labels(
         F.array(
             *[
                 F.struct(
-                    (-_dot(F.col("fs"), w)).alias("negs"), F.lit(lbl).alias("lbl")
+                    (-dot("fs", vec_lit(w))).alias("negs"), F.lit(lbl).alias("lbl")
                 )
                 for lbl, w in sorted(weights.items())
             ]

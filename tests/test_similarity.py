@@ -347,3 +347,20 @@ def test_jl_project_preserves_relative_distances(spark):
     d_near = np.linalg.norm(out[0] - out[1])
     d_far = np.linalg.norm(out[0] - out[2])
     assert d_near < d_far
+
+
+@needs_data
+@pytest.mark.parametrize("name", ["dedup_semantic", "similarity_ivf"])
+def test_cosine_codebook_queries_match_twins(spark, name):
+    # dedup_semantic self-joins on the ranked cid over a projected
+    # (float → double) embedding: the filter the optimizer infers for
+    # both join sides must still bind the vector the rank reads
+    import duckdb
+
+    from character_identification_spark.driver_contract import QUERIES
+    from character_identification_spark.oracles import ORACLES
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'")
+    got = sorted(map(tuple, QUERIES[name](spark, SF).collect()), key=repr)
+    assert got and got == sorted(con.sql(ORACLES[name]).fetchall(), key=repr)
